@@ -44,8 +44,9 @@ dag = DAG(
 )
 
 # One task, like the reference's single PythonOperator — but the work
-# is a Spark job, so retries re-run an IDEMPOTENT pipeline (ep2's
-# cursor is derived from the sink; a retry re-appends nothing).
+# is a Spark job, so retries re-run an IDEMPOTENT pipeline (ep2 appends
+# only plays whose played_at the sink does not hold yet; a retry
+# re-appends nothing).
 run_etl = SparkSubmitOperator(
     task_id="complete_spotify_etl",
     application=GRAFT_JAR,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{RunSummaries, SpotifyFlatten, Validation}
-import graft.sources.{Sinks, SpotifySchemas}
+import graft.sources.{Sinks, SpotifySchemas, StateTable}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The reference's three pipeline entry points (SURVEY.md §3), composed
@@ -31,21 +31,57 @@ object Pipelines {
     * append → summary (spotify_etl2.py:231-288). Validation order
     * preserved: failures fire BEFORE the sink. Empty input
     * short-circuits with a no-op summary, as the reference does.
+    *
+    * Exactly-once under retry, unlike the reference's unguarded append
+    * (SURVEY.md §2.10): only plays whose `played_at` the sink does not
+    * hold yet are appended, so a re-run of the same feed appends
+    * nothing, and a re-run after a crash inside Spark's non-atomic job
+    * commit lands exactly the missing rows. No high-water mark: a late
+    * page whose plays predate the newest stored play still lands.
+    * `tracks_processed` counts the feed's rows, `rows_appended` the
+    * rows this run wrote.
     */
   def recentlyPlayedEtl(
       spark: SparkSession,
       payloads: Dataset[String],
       tablePath: String,
       asOf: java.sql.Date): String = {
+    import org.apache.spark.sql.functions.{col, lit}
     val flat = SpotifyFlatten.recentlyPlayed(
       SpotifySchemas.parse(payloads, SpotifySchemas.recentlyPlayedPayload))
     flat.cache()
     try {
       val report = Validation.check(flat, asOf) // raises on duplicate PK
       if (!report.valid) return """{"tracks_processed":0,"status":"no_data"}"""
-      Sinks.appendPartitioned(flat, tablePath)
-      Sinks.xcomJson(RunSummaries.recentlyPlayedSummary(flat))
+      val unseen = storedPlays(spark, flat, tablePath)
+        .map(seen => flat.join(seen, Seq("played_at"), "left_anti").cache())
+      try {
+        val appended = unseen.map(_.count())
+        if (appended.forall(_ > 0)) Sinks.appendPartitioned(unseen.getOrElse(flat), tablePath)
+        Sinks.xcomJson(RunSummaries.recentlyPlayedSummary(flat).withColumn("rows_appended",
+          appended.fold(col("tracks_processed"))(lit(_))))
+      } finally unseen.foreach(_.unpersist())
     } finally flat.unpersist()
+  }
+
+  /** The `played_at` keys `tablePath` already holds in the `timestamp`
+    * partitions `flat` touches, read from those partition dirs alone;
+    * None when it holds none of them. A fresh sink is answered on the
+    * driver, with no Spark job. */
+  private def storedPlays(spark: SparkSession, flat: org.apache.spark.sql.DataFrame,
+                          tablePath: String): Option[org.apache.spark.sql.DataFrame] = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return None
+    val dirs = flat.select("timestamp").distinct().collect().map { r =>
+      // the sink's own '' -> "unknown" sentinel and partition-path escaping
+      val day = if (r.getString(0).isEmpty) "unknown" else r.getString(0)
+      new org.apache.hadoop.fs.Path(root,
+        "timestamp=" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(day))
+    }.filter(fs.exists).map(_.toString)
+    if (dirs.isEmpty) None
+    else Some(spark.read.option("basePath", tablePath).parquet(dirs.toSeq: _*)
+      .select("played_at"))
   }
 
   /** EP3 — recently-played analysis: ranked flatten → display + CSV +
@@ -236,7 +272,7 @@ object Pipelines {
     * `maintain` (default ON) runs the cadence-gated compaction trio
     * AFTER the turn's state writes: each tier rewrites iff its
     * measured tombstone fraction exceeds `maxTombstoneFrac`
-    * ([[graft.sources.Sinks.tombstoneStats]]), so tombstone-mode
+    * ([[graft.sources.StateTable.due]]), so tombstone-mode
     * deployments bound their read tax WITHOUT any orchestrator
     * compaction DAG — a clean tier costs two count jobs. Set
     * `maintain = false` to keep compaction an externally scheduled
@@ -544,8 +580,9 @@ object Pipelines {
     }
     // LAZY on purpose: many turns never consume the pair frame, and
     // the expensive candidate join must not run eagerly for them. The
-    // one hazard is the post-turn signature compaction below (it
-    // swapRewrites the dir this frame's lazy scan has file-listed) —
+    // one hazard is the post-turn signature compaction below (its
+    // commit garbage-collects the files this frame's lazy scan has
+    // listed) —
     // so the maintenance block materializes the frame FIRST iff it is
     // actually about to rewrite.
     // the unordered core: the ordered catalog frame is derived lazily
@@ -630,20 +667,14 @@ object Pipelines {
     // that owns no compaction DAG never will. So the loop turn itself
     // runs the trio after its state writes: each tier compacts iff its
     // measured tombstone fraction crossed `maxTombstoneFrac`, and a
-    // clean tier costs exactly the two count jobs of tombstoneStats.
+    // clean tier (no tombstones) costs no job at all.
     // The worklists are empty — every stale key was already tombstoned
     // or rewritten above; compaction here only folds tombstones away.
     label("maintenance")
     val noDocKeys = newDocs.select(col("doc_id")).limit(0)
     val noVecKeys = newEmb.select(col("vec_id")).limit(0)
     val sigCompacted = maintain && {
-      val tombDir = new org.apache.hadoop.fs.Path(s"$sigStatePath/tombstones")
-      val due = tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(tombDir) && {
-        val (_, _, frac) = graft.sources.Sinks.tombstoneStatsFast(
-          spark, s"$sigStatePath/sigs", s"$sigStatePath/tombstones")
-        frac > maxTombstoneFrac
-      }
+      val due = StateTable(spark, sigStatePath).due(StateTable.Sigs, maxTombstoneFrac)
       if (due) {
         // about to rewrite the dir the lazy pair plan file-listed:
         // pin the pairs NOW so a later consumer never reads the
@@ -672,7 +703,7 @@ object Pipelines {
     // the row records the state a reader would see. The exact
     // merge-on-read count costs an anti-join SCAN PER TIER per turn —
     // audit numbers must not out-cost the turn; call
-    // [[graft.sources.Sinks.tombstoneStats]] directly when an exact
+    // [[graft.sources.StateTable.stats]] directly when an exact
     // census is actually needed.
     manifestPath.foreach { mp =>
       label("run manifest")
@@ -682,17 +713,13 @@ object Pipelines {
           .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
       val dc = statusCounts(docChanges)
       val ec = statusCounts(embChanges)
-      val (sigLive, sigTombs, sigFrac) = graft.sources.Sinks.tombstoneStatsFast(
-        spark, s"$sigStatePath/sigs", s"$sigStatePath/tombstones")
-      val (ivfLive, ivfTombs, ivfFrac) = graft.sources.Sinks.tombstoneStatsFast(
-        spark, s"$ivfPath/assignments", s"$ivfPath/tombstones")
+      val (sigLive, sigTombs, sigFrac) = StateTable(spark, sigStatePath).statsFast(StateTable.Sigs)
+      val (ivfLive, ivfTombs, ivfFrac) = StateTable(spark, ivfPath).statsFast(StateTable.Assignments)
       val (pqLive, pqTombs, pqFrac) = pqPath
-        .map(pp => graft.sources.Sinks.tombstoneStatsFast(
-          spark, s"$pp/codes", s"$pp/tombstones"))
+        .map(StateTable(spark, _).statsFast(StateTable.Codes))
         .getOrElse((-1L, -1L, -1.0))
       val (encLive, encTombs, encFrac) = encodedPath
-        .map(ep => graft.sources.Sinks.tombstoneStatsFast(
-          spark, s"$ep/ids", s"$ep/tombstones"))
+        .map(StateTable(spark, _).statsFast(StateTable.Ids))
         .getOrElse((-1L, -1L, -1.0))
       val manifestDir = new org.apache.hadoop.fs.Path(mp)
       val fs = manifestDir.getFileSystem(spark.sparkContext.hadoopConfiguration)

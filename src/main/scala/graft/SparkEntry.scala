@@ -1877,7 +1877,7 @@ object SparkEntry {
       // worklist = CHANGED keys only; the removed ghosts must fall out
       // of the corpus-key semi-join without being named
       Dedup.compactSignatures(docs, 3, 16, 4, st, changed.select("doc_id"))
-      s.read.parquet(st + "/sigs").orderBy(col("doc_id"))
+      Dedup.loadSignatures(s, st).orderBy(col("doc_id"))
     }),
     // Same cycle for the IVF tier: stale embeddings (reversed arrays,
     // ids past the centroid block so the centroids stay valid) and

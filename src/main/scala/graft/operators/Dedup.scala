@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash
+import graft.sources.StateTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -399,8 +400,8 @@ object Dedup {
 
   /** Persist MinHash signature state as a lake table — the near-dup
     * analog of [[graft.operators.Similarity.buildIvfIndex]]'s
-    * build-once contract. Layout: ONE table, `path/sigs`
-    * (doc_id, sig_0..n-1) — at 100 TB it is the only structure a
+    * build-once contract. Layout: ONE table, the root's
+    * [[graft.sources.StateTable.Sigs]] member (doc_id, sig_0..n-1) — at 100 TB it is the only structure a
     * daily dedup batch needs (history's TEXT is never re-shingled).
     * Band buckets are a pure function of the signature row
     * ([[bandBuckets]]: a concat over k longs), so they are DERIVED at
@@ -413,7 +414,7 @@ object Dedup {
   def persistMinhashSignatures(docs: DataFrame, n: Int, numHashes: Int,
                                bands: Int, path: String): Unit = {
     val (_, sigs, _) = minhashCandidates(docs, n, numHashes, bands)
-    sigs.write.mode("overwrite").parquet(s"$path/sigs")
+    sigs.write.mode("overwrite").parquet(StateTable(docs.sparkSession, path).path(StateTable.Sigs))
   }
 
   /** Max delta rows the incremental state joins BROADCAST (doc rows;
@@ -608,53 +609,15 @@ object Dedup {
     // the empty-file write and its job wave, the same guard as the
     // DSIR/IVF/PQ appends.
     if (!staticallyEmpty(newSigs))
-      newSigs.except(
-        state.join(deltaSide(newSigs.select(col("doc_id"))), Seq("doc_id"), "left_semi"))
-        .write.mode("append").parquet(s"$path/sigs")
+      StateTable(spark, path).append(StateTable.Sigs, newSigs.except(
+        state.join(deltaSide(newSigs.select(col("doc_id"))), Seq("doc_id"), "left_semi")))
     result
   }
 
-  /** Stale-key compaction for the persisted signature state — the
-    * maintenance half that [[incrementalMinhashEstimated]]'s
-    * append-only contract defers (Pipelines.dailyIncremental returns
-    * CHANGED and REMOVED keys as a worklist instead of auto-appending,
-    * because a torn half-append must never orphan a doc). Rewrites
-    * `path/sigs` so that afterwards the state equals a fresh
-    * [[persistMinhashSignatures]] full build over `currentDocs`
-    * (StateCompactionSpec proves set equality; the q156 catalog query
-    * pins it against the DuckDB oracle):
-    *
-    *  - rows whose doc_id is absent from `currentDocs` are dropped —
-    *    REMOVED docs, detected from the corpus keys themselves, so a
-    *    worklist omission can never leave a ghost signature;
-    *  - rows named in `staleKeys` are dropped and recomputed from the
-    *    current text — CHANGED docs, the one class the state alone
-    *    cannot detect (the whole point of signature state is never
-    *    re-reading history's text); the caller owns this worklist,
-    *    which is exactly `doc_changes.filter(status = 'changed')`
-    *    from the daily loop's snapshot diff;
-    *  - current docs missing from state entirely (a lost append) are
-    *    recomputed too — compaction self-heals;
-    *  - exact duplicate rows from a re-delivered identical batch
-    *    collapse (`distinct` — surviving rows are signature-identical
-    *    by determinism once stale rows are gone).
-    *
-    * Write-new + swap via [[graft.sources.Sinks.swapRewrite]]: the
-    * live table stays readable through the whole rewrite (whose plan
-    * reads it), and a crashed swap leaves the original recoverable at
-    * `sigs_precompact` — the same torn-write discipline as the single
-    * state table itself.
-    *
-    * Scale shape: one pass over the state (numHashes longs per doc,
-    * never text), key-only semi/anti joins against the corpus, and a
-    * shingle pass over ONLY the recomputed docs. Run at the cadence
-    * edits accumulate; a grow-only corpus never needs it.
-    */
-  /** Merge-on-read view of the signature state: `path/sigs` minus the
-    * content-addressed tombstones at `path/tombstones` (absent dir =
-    * plain read). EVERY state reader goes through this, so a
-    * tombstoned row is invisible the moment its tombstone lands —
-    * no rewrite on the read path, ever.
+  /** Merge-on-read view of the signature state
+    * ([[graft.sources.StateTable.live]]). EVERY state reader goes
+    * through this, so a tombstoned row is invisible the moment its
+    * tombstone lands — no rewrite on the read path, ever.
     *
     * Tombstones match on the FULL row (doc_id + every signature
     * column), not the key: a changed doc's re-signed CURRENT row
@@ -663,13 +626,8 @@ object Dedup {
     * deterministic functions of text, so content-addressing is exact.
     */
   def loadSignatures(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DataFrame = {
-    val sigs = spark.read.parquet(s"$path/sigs")
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(t)) sigs
-    else sigs.join(spark.read.parquet(t.toString), sigs.columns.toSeq, "left_anti")
-  }
+                     path: String): DataFrame =
+    StateTable(spark, path).live(StateTable.Sigs)
 
   /** O(|edits|) stale-key healing for the signature state — the
     * merge-on-read alternative to [[compactSignatures]]' rewrite, for
@@ -677,7 +635,7 @@ object Dedup {
     * rewrite is corpus-linear (0.64–0.84× of a re-sign at the ×100
     * staging), so paying it EVERY daily turn nearly doubles loop
     * cost. Tombstoning instead appends the superseded rows'
-    * content-addressed copies to `path/tombstones` and the changed
+    * content-addressed copies to the root's tombstones and the changed
     * docs' re-signed current rows to the state — both |edits|-sized
     * appends — and [[loadSignatures]] serves the healed view
     * immediately. [[compactSignatures]] remains the periodic
@@ -716,37 +674,59 @@ object Dedup {
       .distinct())
     val (_, rawFresh, _) = minhashCandidates(currentChanged, n, numHashes, bands)
     val fresh = materialize(rawFresh)
-    oldRows.except(fresh)
-      .write.mode("append").parquet(s"$path/tombstones")
-    fresh.except(oldRows)
-      .write.mode("append").parquet(s"$path/sigs")
+    val st = StateTable(spark, path)
+    st.appendTombstones(oldRows.except(fresh))
+    st.append(StateTable.Sigs, fresh.except(oldRows))
   }
 
-  /** The compaction CADENCE rule, mechanized: run [[compactSignatures]]
-    * only when outstanding tombstones exceed `maxTombstoneFrac` of the
-    * live view ([[graft.sources.Sinks.tombstoneStats]]) — the fraction
-    * bounds both the read-side anti-join tax and the tombstone side's
-    * broadcastability, so a scheduler can call this after every healed
-    * turn and pay the rewrite only when it buys something. Returns
-    * whether the compaction ran. The IVF/PQ tiers gate identically off
-    * the same stats helper on their own table/tombstone pair.
+  /** [[compactSignatures]] gated on the cadence rule
+    * ([[graft.sources.StateTable.due]]), so a scheduler can call this
+    * after every healed turn and pay the rewrite only when it buys
+    * something. Returns whether the compaction ran.
     */
   def compactSignaturesIfNeeded(currentDocs: DataFrame, n: Int, numHashes: Int,
                                 bands: Int, path: String, staleKeys: DataFrame,
                                 maxTombstoneFrac: Double = 0.1): Boolean = {
-    require(maxTombstoneFrac >= 0, s"maxTombstoneFrac must be >= 0 (got $maxTombstoneFrac)")
-    // fast path: no tombstone dir means nothing to fold — skip the
-    // two count jobs entirely (the common clean-turn case)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!tombDir.getFileSystem(currentDocs.sparkSession.sparkContext.hadoopConfiguration)
-          .exists(tombDir)) return false
-    val (_, _, frac) = graft.sources.Sinks.tombstoneStatsFast(
-      currentDocs.sparkSession, s"$path/sigs", s"$path/tombstones")
-    val due = frac > maxTombstoneFrac
+    val due = StateTable(currentDocs.sparkSession, path).due(StateTable.Sigs, maxTombstoneFrac)
     if (due) compactSignatures(currentDocs, n, numHashes, bands, path, staleKeys)
     due
   }
 
+  /** Stale-key compaction for the persisted signature state — the
+    * maintenance half that [[incrementalMinhashEstimated]]'s
+    * append-only contract defers (Pipelines.dailyIncremental returns
+    * CHANGED and REMOVED keys as a worklist instead of auto-appending,
+    * because a torn half-append must never orphan a doc). Rewrites
+    * the signature table so that afterwards the state equals a fresh
+    * [[persistMinhashSignatures]] full build over `currentDocs`
+    * (StateCompactionSpec proves set equality; the q156 catalog query
+    * pins it against the DuckDB oracle):
+    *
+    *  - rows whose doc_id is absent from `currentDocs` are dropped —
+    *    REMOVED docs, detected from the corpus keys themselves, so a
+    *    worklist omission can never leave a ghost signature;
+    *  - rows named in `staleKeys` are dropped and recomputed from the
+    *    current text — CHANGED docs, the one class the state alone
+    *    cannot detect (the whole point of signature state is never
+    *    re-reading history's text); the caller owns this worklist,
+    *    which is exactly `doc_changes.filter(status = 'changed')`
+    *    from the daily loop's snapshot diff;
+    *  - current docs missing from state entirely (a lost append) are
+    *    recomputed too — compaction self-heals;
+    *  - exact duplicate rows from a re-delivered identical batch
+    *    collapse (`distinct` — surviving rows are signature-identical
+    *    by determinism once stale rows are gone).
+    *
+    * Commits a new generation through [[graft.sources.StateTable.commit]]
+    * (whose protocol keeps the live table readable through the rewrite
+    * that reads it, and converges after a crash at any step); the
+    * tombstones it folded are spent with the old generation.
+    *
+    * Scale shape: one pass over the state (numHashes longs per doc,
+    * never text), key-only semi/anti joins against the corpus, and a
+    * shingle pass over ONLY the recomputed docs. Run at the cadence
+    * edits accumulate; a grow-only corpus never needs it.
+    */
   def compactSignatures(currentDocs: DataFrame, n: Int, numHashes: Int,
                         bands: Int, path: String, staleKeys: DataFrame): Unit = {
     val spark = currentDocs.sparkSession
@@ -758,18 +738,9 @@ object Dedup {
     val needFresh = currentDocs
       .join(keep.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val (_, freshSigs, _) = minhashCandidates(needFresh, n, numHashes, bands)
-    graft.sources.Sinks.swapRewrite(spark, s"$path/sigs") { tmp =>
-      keep.unionByName(freshSigs).write.parquet(tmp)
+    StateTable(spark, path).commit(StateTable.Sigs) { p =>
+      keep.unionByName(freshSigs).write.parquet(p(StateTable.Sigs))
     }
-    // the rewrite folded the tombstoned rows away (it read the
-    // merge-on-read view), so the tombstones are spent. A crash
-    // between the swap and this delete is safe: a leftover tombstone
-    // names a row that no longer exists (removed docs are gone, a
-    // changed doc's row is the NEW content), so the anti-join matches
-    // nothing — compaction is idempotent over its own debris.
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tomb)) fs.delete(tomb, true)
   }
 
   /** [[minhashLsh]] with ESTIMATOR verification — the measured 100 TB

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.StateTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -299,69 +300,66 @@ object Similarity {
   /** Build the IVF index ONCE and persist it as a lake table — at
     * 100 TB the centroid argmax over the full corpus is the expensive
     * half of every IVF query, and rebuilding it per query run (what
-    * the inline [[cosineTopKIvf]] does) is pure waste. Layout:
-    * `path/centroids` (tiny, broadcasts on load) and
-    * `path/assignments` PARTITIONED BY cell — the on-disk realization
+    * the inline [[cosineTopKIvf]] does) is pure waste. Layout: the
+    * root's [[StateTable.Centroids]] (tiny, broadcasts on load) and
+    * [[StateTable.Assignments]] PARTITIONED BY cell — the on-disk realization
     * of "the cell column becomes the table's partition key": a probe
     * of nprobe cells reads exactly nprobe/nlist of the corpus via
     * partition pruning, no scan of the rest.
     */
   def buildIvfIndex(embeddings: DataFrame, nlist: Int, path: String): Unit = {
-    val (cents, assign) = ivfStructure(embeddings, nlist)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    assign.write.mode("overwrite").partitionBy("cell").parquet(s"$path/assignments")
+    val st = StateTable(embeddings.sparkSession, path)
+    writeIvfIndex(ivfStructure(embeddings, nlist),
+      st.path(StateTable.Centroids), st.path(StateTable.Assignments))
   }
 
   /** [[buildIvfIndex]] over a LIVE index — the full periodic rebuild
     * ([[recenterIvfIndex]]'s corpus-fed sibling, for when the rebuild
     * should also pick up re-normalized vectors or a new `nlist`).
     * A plain buildIvfIndex at the same path overwrites the two
-    * subdirectories one after the other, so a concurrent reader can
-    * load NEW centroids with OLD assignments (cells keyed to centroids
-    * that no longer exist); rebuilding into a temp root and swapping
-    * ([[graft.sources.Sinks.swapRewrite]]) closes that window — the
-    * same discipline every other state mutation here follows. Spent
-    * tombstones vanish with the old root.
+    * members one after the other, so a concurrent reader can load NEW
+    * centroids with OLD assignments (cells keyed to centroids that no
+    * longer exist); committing both as one generation
+    * ([[StateTable.commit]]) makes that mix impossible. Spent
+    * tombstones are dropped with the old generation.
     */
   def rebuildIvfIndex(embeddings: DataFrame,
                       spark: org.apache.spark.sql.SparkSession,
                       nlist: Int, path: String): Unit =
-    graft.sources.Sinks.swapRewrite(spark, path) { tmp =>
-      buildIvfIndex(embeddings, nlist, tmp)
+    StateTable(spark, path).commit(StateTable.Centroids, StateTable.Assignments) { p =>
+      writeIvfIndex(ivfStructure(embeddings, nlist),
+        p(StateTable.Centroids), p(StateTable.Assignments))
     }
+
+  private def writeIvfIndex(index: (DataFrame, DataFrame), centsDir: String,
+                            assignDir: String): Unit = {
+    index._1.write.mode("overwrite").parquet(centsDir)
+    index._2.write.mode("overwrite").partitionBy("cell").parquet(assignDir)
+  }
 
   /** Load a persisted IVF index: (centroids, assignments). The cell
     * partition column comes back integer-typed from directory
     * inference — recast to long so join keys match the inline path.
     */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    val raw = spark.read.parquet(s"$path/assignments")
-      .withColumn("cell", col("cell").cast("long"))
+    val st = StateTable(spark, path)
     // merge-on-read: content-addressed tombstones (see
     // [[tombstoneIvfIndex]]) are anti-joined out of every load, so a
     // tombstoned assignment is invisible without any rewrite. u is a
     // deterministic function of the embedding (normalized()), so
     // full-row matching is exact.
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val assign =
-      if (!fs.exists(t)) raw
-      else raw.join(spark.read.parquet(t.toString), raw.columns.toSeq, "left_anti")
-    (cents, assign)
+    (spark.read.parquet(st.path(StateTable.Centroids)),
+      st.live(StateTable.Assignments).withColumn("cell", col("cell").cast("long")))
   }
 
-  /** O(|edits|) stale-key healing for the persisted IVF index — the
-    * merge-on-read twin of [[graft.operators.Dedup.tombstoneSignatures]]:
+  /** O(|edits|) stale-key healing for the persisted IVF index, as
+    * [[graft.operators.Dedup.tombstoneSignatures]] does for signatures:
     * changed vectors' old assignment rows and removed vectors' rows
-    * are appended (content-addressed, full row) to
-    * `path/tombstones`; changed vectors' CURRENT rows re-enter via
-    * the same centroid-assignment path the daily append rides. Both
-    * writes are |edits|-sized — no assignments rewrite, which
-    * [[compactIvfIndex]] defers to maintenance cadence (it folds the
-    * tombstones into its rewrite and clears them). Write order is
-    * tombstone-then-append; a retry after a crash in between
-    * self-heals exactly as the signature twin does.
+    * are tombstoned (content-addressed, full row); changed vectors'
+    * CURRENT rows re-enter via the same centroid-assignment path the
+    * daily append rides. Both writes are |edits|-sized; the
+    * assignments rewrite is [[compactIvfIndex]]'s, at maintenance
+    * cadence.
     */
   def tombstoneIvfIndex(currentChanged: DataFrame,
                         spark: org.apache.spark.sql.SparkSession, path: String,
@@ -379,10 +377,9 @@ object Similarity {
       assignToCells(normalized(currentChanged), cents)
         .withColumn("cell", col("cell").cast("long"))
         .select(oldRows.columns.map(col): _*))
-    oldRows.except(fresh)
-      .write.mode("append").parquet(s"$path/tombstones")
-    fresh.except(oldRows)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/assignments")
+    val st = StateTable(spark, path)
+    st.appendTombstones(oldRows.except(fresh))
+    st.append(StateTable.Assignments, fresh.except(oldRows), "cell")
   }
 
   /** Incremental half of the build-once contract: assign ONLY the new
@@ -399,14 +396,25 @@ object Similarity {
     */
   def appendToIvfIndex(newVectors: DataFrame, spark: org.apache.spark.sql.SparkSession,
                        path: String): Unit = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    assignToCells(normalized(newVectors), cents)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/assignments")
+    val st = StateTable(spark, path)
+    val cents = spark.read.parquet(st.path(StateTable.Centroids))
+    st.append(StateTable.Assignments, assignToCells(normalized(newVectors), cents), "cell")
+  }
+
+  /** [[compactIvfIndex]] gated on the cadence rule
+    * ([[StateTable.due]]). Returns whether the rewrite ran.
+    */
+  def compactIvfIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
+                              path: String, staleKeys: DataFrame,
+                              maxTombstoneFrac: Double = 0.1): Boolean = {
+    val due = StateTable(spark, path).due(StateTable.Assignments, maxTombstoneFrac)
+    if (due) compactIvfIndex(spark, path, staleKeys)
+    due
   }
 
   /** Stale-key compaction for the persisted IVF index — the
     * maintenance half of [[appendToIvfIndex]]'s append-only contract.
-    * Rewrites `path/assignments` dropping every vec_id in `staleKeys`:
+    * Rewrites the assignments dropping every vec_id in `staleKeys`:
     * REMOVED vectors, plus the OLD rows of CHANGED vectors (re-append
     * the current version afterwards via [[appendToIvfIndex]] — the
     * daily loop's `emb_changes` frame names both classes). The
@@ -419,50 +427,22 @@ object Similarity {
     * assignments keyed to a stale centroid are wrong everywhere, not
     * just at the edited rows).
     *
-    * Write-new + swap ([[graft.sources.Sinks.swapRewrite]]) with the
-    * cell partitioning preserved so probe-time partition pruning
+    * Commits a new assignments generation ([[StateTable.commit]]) with
+    * the cell partitioning preserved so probe-time partition pruning
     * survives; the per-cell `repartition` also merges the
     * one-file-per-batch debris daily appends leave, so this doubles
     * as the table's small-file compaction.
     */
-  /** [[compactIvfIndex]] gated on the tombstone-fraction threshold —
-    * the cadence rule ([[graft.operators.Dedup.compactSignaturesIfNeeded]],
-    * same stats helper). Returns whether the rewrite ran.
-    */
-  def compactIvfIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                              path: String, staleKeys: DataFrame,
-                              maxTombstoneFrac: Double = 0.1): Boolean = {
-    require(maxTombstoneFrac >= 0, s"maxTombstoneFrac must be >= 0 (got $maxTombstoneFrac)")
-    // fast path: no tombstone dir means nothing to fold — skip the
-    // two count jobs entirely (the common clean-turn case)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(tombDir)) return false
-    val (_, _, frac) = graft.sources.Sinks.tombstoneStatsFast(
-      spark, s"$path/assignments", s"$path/tombstones")
-    val due = frac > maxTombstoneFrac
-    if (due) compactIvfIndex(spark, path, staleKeys)
-    due
-  }
-
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      staleKeys: DataFrame): Unit = {
-    val assignPath = s"$path/assignments"
-    graft.sources.Sinks.swapRewrite(spark, assignPath) { tmp =>
+                      staleKeys: DataFrame): Unit =
+    StateTable(spark, path).commit(StateTable.Assignments) { p =>
       // read the merge-on-read view so outstanding tombstones fold
       // into the rewrite (loadIvfIndex applies them)
       loadIvfIndex(spark, path)._2
         .join(staleKeys.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(tmp)
+        .write.partitionBy("cell").parquet(p(StateTable.Assignments))
     }
-    // spent tombstones: a leftover after a crash here names content
-    // that no longer exists, so reapplying it is a no-op (idempotent,
-    // same argument as Dedup.compactSignatures)
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tomb)) fs.delete(tomb, true)
-  }
 
   /** Rebuild the IVF structure FROM STATE — the periodic maintenance
     * event, with no corpus re-read: the assignments table stores each
@@ -483,10 +463,9 @@ object Similarity {
     * q166 pins it to the inline-IVF oracle) — at |state| cost, not
     * corpus cost.
     *
-    * The whole index swaps atomically at its root
-    * ([[graft.sources.Sinks.swapRewrite]]), so readers never observe
-    * new centroids with old assignments or vice versa; spent
-    * tombstones vanish with the old root.
+    * Both members commit as one generation ([[StateTable.commit]]),
+    * so readers never observe new centroids with old assignments or
+    * vice versa; spent tombstones are dropped with the old generation.
     */
   def recenterIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        nlist: Int = 0): Unit = {
@@ -496,11 +475,10 @@ object Similarity {
     val newCents = e.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cid"), col("u").as("cu"))
     val newAssign = assignToCells(e, newCents)
-    graft.sources.Sinks.swapRewrite(spark, path) { tmp =>
-      // both writes execute before the swap and read the ORIGINAL
-      // index files, so the rebuild is consistent even while live
-      newCents.write.parquet(s"$tmp/centroids")
-      newAssign.write.partitionBy("cell").parquet(s"$tmp/assignments")
+    // both writes execute before the manifest flip and read the
+    // ORIGINAL index files, so the rebuild is consistent even while live
+    StateTable(spark, path).commit(StateTable.Centroids, StateTable.Assignments) { p =>
+      writeIvfIndex((newCents, newAssign), p(StateTable.Centroids), p(StateTable.Assignments))
     }
   }
 
@@ -772,12 +750,35 @@ object Similarity {
     * training and corpus encoding, and the encoded corpus is the
     * artifact worth keeping (n rows × m smallint codes ≈ 16 B/vector
     * at the defaults vs 256 B of f32 — the compression that lets the
-    * scan live in aggregate RAM). Layout: `path/codebooks` (m·ks
-    * rows, broadcasts on load) and `path/codes` one row per vector
+    * scan live in aggregate RAM). Layout: the root's
+    * [[StateTable.Codebooks]] (m·ks rows, broadcasts on load) and
+    * [[StateTable.Codes]], one row per vector
     * with its m-code array, smallint-typed (parquet
     * dictionary+RLE-encodes these to ~nothing).
     */
   def buildPqIndex(embeddings: DataFrame, m: Int, ks: Int, path: String): Unit = {
+    val st = StateTable(embeddings.sparkSession, path)
+    writePqIndex(embeddings, m, ks, st.path(StateTable.Codebooks), st.path(StateTable.Codes))
+  }
+
+  /** Codebook RETRAINING over a LIVE index — the periodic maintenance
+    * event [[appendToPqIndex]]'s contract defers (retrained codebooks
+    * change every vector's codes, so this is always a full rebuild).
+    * Same atomicity argument as [[rebuildIvfIndex]]: a plain
+    * buildPqIndex at the live path exposes a window where readers
+    * decode OLD codes against NEW codebooks — silently wrong
+    * distances, the worst failure shape — so both members commit as
+    * one generation. Spent tombstones are dropped with the old one.
+    */
+  def retrainPqIndex(embeddings: DataFrame,
+                     spark: org.apache.spark.sql.SparkSession,
+                     m: Int, ks: Int, path: String): Unit =
+    StateTable(spark, path).commit(StateTable.Codebooks, StateTable.Codes) { p =>
+      writePqIndex(embeddings, m, ks, p(StateTable.Codebooks), p(StateTable.Codes))
+    }
+
+  private def writePqIndex(embeddings: DataFrame, m: Int, ks: Int,
+                           codebooksDir: String, codesDir: String): Unit = {
     require(ks >= 1 && ks <= 32767, s"ks must fit a smallint codebook id (got $ks)")
     val e = pqInt8(embeddings)
     pqDimCheck(e, m)
@@ -787,26 +788,10 @@ object Similarity {
     // paying the corpus cost once
     val sv = graft.operators.Dedup.materialize(pqMelt(e, m))
     val c1 = pqCodebooks(sv, ks)
-    c1.write.mode("overwrite").parquet(s"$path/codebooks")
-    writeCodes(sv, c1, path, "overwrite")
+    c1.write.mode("overwrite").parquet(codebooksDir)
+    encodeCodes(sv, c1).write.mode("overwrite").parquet(codesDir)
     graft.operators.Dedup.releaseCheckpoint(sv)
   }
-
-  /** Codebook RETRAINING over a LIVE index — the periodic maintenance
-    * event [[appendToPqIndex]]'s contract defers (retrained codebooks
-    * change every vector's codes, so this is always a full rebuild).
-    * Same atomicity argument as [[rebuildIvfIndex]]: a plain
-    * buildPqIndex at the live path exposes a window where readers
-    * decode OLD codes against NEW codebooks — silently wrong
-    * distances, the worst failure shape — so the rebuild lands in a
-    * temp root and swaps. Spent tombstones vanish with the old root.
-    */
-  def retrainPqIndex(embeddings: DataFrame,
-                     spark: org.apache.spark.sql.SparkSession,
-                     m: Int, ks: Int, path: String): Unit =
-    graft.sources.Sinks.swapRewrite(spark, path) { tmp =>
-      buildPqIndex(embeddings, m, ks, tmp)
-    }
 
   /** The ONE encode-and-write block both the one-shot build and the
     * incremental append go through — appendToPqIndex's
@@ -821,26 +806,14 @@ object Similarity {
         col("cid").cast("smallint").as("c")))).as("sc"))
       .select(col("vec_id"), expr("transform(sc, p -> p.c)").as("codes"))
 
-  private def writeCodes(sv: DataFrame, c1: DataFrame, path: String,
-                         mode: String): Unit =
-    encodeCodes(sv, c1).write.mode(mode).parquet(s"$path/codes")
-
-  /** Merge-on-read view of the PQ code table: `path/codes` minus the
-    * content-addressed tombstones at `path/tombstones` — the
-    * [[graft.operators.Dedup.loadSignatures]] discipline on the third
-    * key-shaped state table. Encoding is deterministic against the
-    * persisted codebooks, so full-row (vec_id + codes) matching is
-    * exact and a re-encoded changed vector's new row survives the
-    * anti-join.
+  /** Merge-on-read view of the PQ code table ([[StateTable.live]]).
+    * Encoding is deterministic against the persisted codebooks, so
+    * full-row (vec_id + codes) matching is exact and a re-encoded
+    * changed vector's new row survives the anti-join.
     */
   private def pqCodesView(spark: org.apache.spark.sql.SparkSession,
-                          path: String): DataFrame = {
-    val raw = spark.read.parquet(s"$path/codes")
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(t)) raw
-    else raw.join(spark.read.parquet(t.toString), raw.columns.toSeq, "left_anti")
-  }
+                          path: String): DataFrame =
+    StateTable(spark, path).live(StateTable.Codes)
 
   /** Memoized subspace count of a persisted PQ index, keyed on the
     * codebooks directory's file signature (names + mtimes + lengths —
@@ -848,13 +821,14 @@ object Similarity {
     * of the tiny codebooks artifact, yet each of the three index
     * operators re-derived it with its own agg+head job — three driver
     * actions per daily PQ turn for a constant. Any codebook rewrite
-    * (retrain, swapRewrite) changes the signature and invalidates.
+    * (a retrain commits a new generation) changes the signature and
+    * invalidates.
     */
   private val pqMMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
   private def pqSubspaces(spark: org.apache.spark.sql.SparkSession,
                           path: String, c1: DataFrame): Int = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/codebooks")
+    val dir = new org.apache.hadoop.fs.Path(StateTable(spark, path).path(StateTable.Codebooks))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = fs.listStatus(dir).map(s =>
       s"${s.getPath.getName}:${s.getModificationTime}:${s.getLen}")
@@ -868,20 +842,19 @@ object Similarity {
     }
   }
 
-  /** O(|edits|) stale-key healing for the persisted PQ index — the
-    * [[tombstoneIvfIndex]] twin for the code table: superseded code
+  /** O(|edits|) stale-key healing for the persisted PQ code table,
+    * as [[tombstoneIvfIndex]] does for assignments: superseded code
     * rows (changed vectors' old encodings, removed vectors) are
     * content-tombstoned, changed vectors re-encode against the
     * UNTOUCHED persisted codebooks and append. Codebook retraining
     * remains the periodic full-rebuild event ([[appendToPqIndex]]'s
-    * contract). Write order and retry semantics as the signature twin;
-    * [[compactPqIndex]] folds tombstones into its rewrite and clears
-    * them.
+    * contract).
     */
   def tombstonePqIndex(currentChanged: DataFrame,
                        spark: org.apache.spark.sql.SparkSession, path: String,
                        removedKeys: DataFrame): Unit = {
-    val c1 = spark.read.parquet(s"$path/codebooks")
+    val st = StateTable(spark, path)
+    val c1 = spark.read.parquet(st.path(StateTable.Codebooks))
     val m = pqSubspaces(spark, path, c1)
     val staleKeys = currentChanged.select(col("vec_id"))
       .unionByName(removedKeys.select(col("vec_id"))).distinct()
@@ -893,10 +866,8 @@ object Similarity {
     pqDimCheck(e, m)
     val fresh = graft.operators.Dedup.materialize(
       encodeCodes(pqMelt(e, m), c1).select(oldRows.columns.map(col): _*))
-    oldRows.except(fresh)
-      .write.mode("append").parquet(s"$path/tombstones")
-    fresh.except(oldRows)
-      .write.mode("append").parquet(s"$path/codes")
+    st.appendTombstones(oldRows.except(fresh))
+    st.append(StateTable.Codes, fresh.except(oldRows))
   }
 
   /** Load a persisted PQ index: (codebooks, codes melted back to
@@ -907,7 +878,7 @@ object Similarity {
     */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession, path: String)
   : (DataFrame, DataFrame, Int) = {
-    val c1 = spark.read.parquet(s"$path/codebooks")
+    val c1 = spark.read.parquet(StateTable(spark, path).path(StateTable.Codebooks))
     // m is a property of the index, not a caller opinion: passing a
     // mismatched m would silently sum a subset of each vector's codes
     // (and truncate dot products) — derive it from the artifact
@@ -934,16 +905,28 @@ object Similarity {
     */
   def appendToPqIndex(newVectors: DataFrame, spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit = {
-    val c1 = spark.read.parquet(s"$path/codebooks")
+    val st = StateTable(spark, path)
+    val c1 = spark.read.parquet(st.path(StateTable.Codebooks))
     val m = pqSubspaces(spark, path, c1)
     val e = pqInt8(newVectors)
     pqDimCheck(e, m)
-    writeCodes(pqMelt(e, m), c1, path, "append")
+    st.append(StateTable.Codes, encodeCodes(pqMelt(e, m), c1))
+  }
+
+  /** [[compactPqIndex]] gated on the cadence rule
+    * ([[StateTable.due]]). Returns whether the rewrite ran.
+    */
+  def compactPqIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
+                             path: String, staleKeys: DataFrame,
+                             maxTombstoneFrac: Double = 0.1): Boolean = {
+    val due = StateTable(spark, path).due(StateTable.Codes, maxTombstoneFrac)
+    if (due) compactPqIndex(spark, path, staleKeys)
+    due
   }
 
   /** Stale-key compaction for the persisted PQ index — the
-    * [[compactIvfIndex]] analog for the code table: rewrites
-    * `path/codes` dropping every vec_id in `staleKeys` (removed
+    * [[compactIvfIndex]] analog for the code table: rewrites the
+    * codes dropping every vec_id in `staleKeys` (removed
     * vectors, or a deprecated batch being rolled back; re-append the
     * current version of changed vectors via [[appendToPqIndex]]).
     * The codebooks are preserved untouched, so the post-compaction
@@ -953,43 +936,17 @@ object Similarity {
     * the edited corpus is deliberately out of scope — retrained
     * codebooks change every vector's codes, which is the documented
     * periodic-full-rebuild trade, exactly like IVF re-centering.
-    * Write-new + swap ([[graft.sources.Sinks.swapRewrite]]); the flat
+    * Commits a new codes generation ([[StateTable.commit]]); the flat
     * rewrite also merges the one-file-per-batch append debris.
     */
-  /** [[compactPqIndex]] gated on the tombstone-fraction threshold —
-    * the cadence rule, completing the per-tier trio. Returns whether
-    * the rewrite ran.
-    */
-  def compactPqIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-                             path: String, staleKeys: DataFrame,
-                             maxTombstoneFrac: Double = 0.1): Boolean = {
-    require(maxTombstoneFrac >= 0, s"maxTombstoneFrac must be >= 0 (got $maxTombstoneFrac)")
-    // fast path: no tombstone dir means nothing to fold — skip the
-    // two count jobs entirely (the common clean-turn case)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (!tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(tombDir)) return false
-    val (_, _, frac) = graft.sources.Sinks.tombstoneStatsFast(
-      spark, s"$path/codes", s"$path/tombstones")
-    val due = frac > maxTombstoneFrac
-    if (due) compactPqIndex(spark, path, staleKeys)
-    due
-  }
-
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                     staleKeys: DataFrame): Unit = {
-    val codesPath = s"$path/codes"
-    graft.sources.Sinks.swapRewrite(spark, codesPath) { tmp =>
+                     staleKeys: DataFrame): Unit =
+    StateTable(spark, path).commit(StateTable.Codes) { p =>
       // merge-on-read view: outstanding tombstones fold into the rewrite
       pqCodesView(spark, path)
         .join(staleKeys.select(col("vec_id")), Seq("vec_id"), "left_anti")
-        .write.parquet(tmp)
+        .write.parquet(p(StateTable.Codes))
     }
-    // spent tombstones — idempotent over debris, as the IVF/sig twins
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tomb)) fs.delete(tomb, true)
-  }
 
   /** Query-many half of the build-once contract: identical results to
     * [[pqTopK]] on the same corpus/parameters (PqIndexSpec), but

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.PortableHash
+import graft.sources.StateTable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1246,7 +1247,7 @@ object TextAnalysis {
   def persistEncodedCorpus(docs: DataFrame, spark: org.apache.spark.sql.SparkSession,
                            vocabPath: String, encPath: String): Unit =
     withIdsFp(bpeEncodeIdsFromVocab(docs, spark, vocabPath))
-      .write.mode("overwrite").parquet(s"$encPath/ids")
+      .write.mode("overwrite").parquet(StateTable(spark, encPath).path(StateTable.Ids))
 
   /** Merge-on-read view: stored rows minus outstanding tombstones
     * (broadcast anti-join on (doc_id, fp) — |tombstones| scalar rows,
@@ -1256,9 +1257,8 @@ object TextAnalysis {
     * re-drain probes still need to read the (empty) live view. */
   def loadEncodedCorpus(spark: org.apache.spark.sql.SparkSession,
                         encPath: String): DataFrame = {
-    val idsP = new org.apache.hadoop.fs.Path(s"$encPath/ids")
-    val idsFs = idsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!idsFs.exists(idsP))
+    val st = StateTable(spark, encPath)
+    if (!st.exists(StateTable.Ids))
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
@@ -1271,12 +1271,7 @@ object TextAnalysis {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("fp",
             org.apache.spark.sql.types.StringType))))
-    val raw = spark.read.parquet(s"$encPath/ids")
-    val t = new org.apache.hadoop.fs.Path(s"$encPath/tombstones")
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(t)) raw
-    else raw.join(broadcast(spark.read.parquet(t.toString)),
-      Seq("doc_id", "fp"), "left_anti")
+    st.live(StateTable.Ids, broadcastTombstones = true)
   }
 
   /** Append a batch's encodings, key+content-filtered against the live
@@ -1295,11 +1290,10 @@ object TextAnalysis {
     // the full live-key table every append once it outgrew broadcast
     // (per micro-batch in the stream front; per turn in the daily
     // loop). Below broadcast size it IS the plain anti — no extra jobs.
-    graft.operators.Dedup.deltaAntiState(
-        withIdsFp(bpeEncodeIdsWith(batch, art)),
-        loadEncodedCorpus(spark, encPath).select(col("doc_id"), col("fp")),
-        Seq("doc_id", "fp"))
-      .write.mode("append").parquet(s"$encPath/ids")
+    StateTable(spark, encPath).append(StateTable.Ids, graft.operators.Dedup.deltaAntiState(
+      withIdsFp(bpeEncodeIdsWith(batch, art)),
+      loadEncodedCorpus(spark, encPath).select(col("doc_id"), col("fp")),
+      Seq("doc_id", "fp")))
   }
 
 
@@ -1327,49 +1321,36 @@ object TextAnalysis {
     val ofRemoved = live.join(graft.operators.Dedup.deltaProbeSide(
         removedKeys.select(col("doc_id")), live), Seq("doc_id"))
       .select(col("doc_id"), col("fp"))
-    staleOfChanged.unionByName(ofRemoved).distinct()
-      .write.mode("append").parquet(s"$encPath/tombstones")
-    graft.operators.Dedup.deltaAntiState(fresh,
-        loadEncodedCorpus(spark, encPath).select(col("doc_id"), col("fp")),
-        Seq("doc_id", "fp"))
-      .write.mode("append").parquet(s"$encPath/ids")
+    val st = StateTable(spark, encPath)
+    st.appendTombstones(staleOfChanged.unionByName(ofRemoved).distinct())
+    st.append(StateTable.Ids, graft.operators.Dedup.deltaAntiState(fresh,
+      loadEncodedCorpus(spark, encPath).select(col("doc_id"), col("fp")),
+      Seq("doc_id", "fp")))
   }
 
-  /** Fold tombstones away: rewrite the table to its live view minus
-    * `staleKeys`, atomically, and clear spent tombstones. Afterwards
-    * the table equals a fresh [[persistEncodedCorpus]] build over the
-    * current corpus. */
+  /** Fold tombstones away: commit the table's live view minus
+    * `staleKeys` as a new generation ([[StateTable.commit]]).
+    * Afterwards the table equals a fresh [[persistEncodedCorpus]] build
+    * over the current corpus. */
   def compactEncodedCorpus(spark: org.apache.spark.sql.SparkSession,
                            encPath: String, staleKeys: DataFrame): Unit = {
+    val st = StateTable(spark, encPath)
     // a table that was never created (born-empty tier: every append so
-    // far was skipped as provably empty) has nothing to rewrite — and
-    // swapRewrite's rename would fail on the absent dir
-    val idsP = new org.apache.hadoop.fs.Path(s"$encPath/ids")
-    if (!idsP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(idsP))
-      return
-    graft.sources.Sinks.swapRewrite(spark, s"$encPath/ids") { tmp =>
-      loadEncodedCorpus(spark, encPath)
-        .join(staleKeys.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .write.parquet(tmp)
-    }
-    val tomb = new org.apache.hadoop.fs.Path(s"$encPath/tombstones")
-    val fs = tomb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tomb)) fs.delete(tomb, true)
+    // far was skipped as provably empty) has nothing to rewrite
+    if (st.exists(StateTable.Ids))
+      st.commit(StateTable.Ids) { p =>
+        loadEncodedCorpus(spark, encPath)
+          .join(staleKeys.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .write.parquet(p(StateTable.Ids))
+      }
   }
 
-  /** The cadence gate for the encoded-corpus tier — same rule as the
-    * signature/IVF/PQ twins, fast-stats fraction, fires early at
-    * worst. Returns whether the rewrite ran. */
+  /** [[compactEncodedCorpus]] gated on the cadence rule
+    * ([[StateTable.due]]). Returns whether the rewrite ran. */
   def compactEncodedCorpusIfNeeded(spark: org.apache.spark.sql.SparkSession,
                                    encPath: String, staleKeys: DataFrame,
                                    maxTombstoneFrac: Double = 0.1): Boolean = {
-    require(maxTombstoneFrac >= 0, s"maxTombstoneFrac must be >= 0 (got $maxTombstoneFrac)")
-    val tombDir = new org.apache.hadoop.fs.Path(s"$encPath/tombstones")
-    if (!tombDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .exists(tombDir)) return false
-    val (_, _, frac) = graft.sources.Sinks.tombstoneStatsFast(
-      spark, s"$encPath/ids", s"$encPath/tombstones")
-    val due = frac > maxTombstoneFrac
+    val due = StateTable(spark, encPath).due(StateTable.Ids, maxTombstoneFrac)
     if (due) compactEncodedCorpus(spark, encPath, staleKeys)
     due
   }
@@ -1558,10 +1539,10 @@ object TextAnalysis {
     * old layout (schema-level or row-level, via a mergeSchema read)
     * and rewrite ONCE with the historical defaults — ngram = 1 (the
     * only order that existed pre-stamp) and bid = "" (at-least-once,
-    * no replay identity) — through the atomic
-    * [[graft.sources.Sinks.swapRewrite]] so a crash never strands a
-    * half-migrated table. Idempotent: a current-layout table returns
-    * without touching storage.
+    * no replay identity) — committed as a new generation
+    * ([[StateTable.commit]]), so a crash never strands a half-migrated
+    * table. Idempotent: a current-layout table returns without touching
+    * storage.
     */
   /** Paths already checked/migrated this JVM: every writer to a DSIR
     * state table lives in this process, so one check per path per JVM
@@ -1575,12 +1556,11 @@ object TextAnalysis {
   private def migrateDsirStateIfNeeded(spark: org.apache.spark.sql.SparkSession,
                                        statePath: String): Unit = {
     if (dsirMigrationChecked.contains(statePath)) return
-    val dir = new org.apache.hadoop.fs.Path(s"$statePath/buckets")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return
+    val st = StateTable(spark, statePath)
+    if (!st.exists(StateTable.Buckets)) return
     // mergeSchema: a mixed dir must resolve to the UNION schema here,
     // whatever footer the default reader would have sampled
-    val raw = spark.read.option("mergeSchema", "true").parquet(dir.toString)
+    val raw = spark.read.option("mergeSchema", "true").parquet(st.path(StateTable.Buckets))
     val cols = raw.columns.toSet
     require(cols.contains("nb"),
       s"dsir state at $statePath carries no nb (bucket count) stamp — " +
@@ -1589,14 +1569,14 @@ object TextAnalysis {
       if (!cols.contains("ng") || !cols.contains("bid")) true
       else !raw.filter(col("ng").isNull || col("bid").isNull).limit(1).isEmpty
     if (!stale) { dsirMigrationChecked.add(statePath); return }
-    graft.sources.Sinks.swapRewrite(spark, dir.toString) { tmp =>
+    st.commit(StateTable.Buckets) { p =>
       val withNg =
         if (cols.contains("ng")) raw.withColumn("ng", coalesce(col("ng"), lit(1)))
         else raw.withColumn("ng", lit(1))
       val full =
         if (cols.contains("bid")) withNg.withColumn("bid", coalesce(col("bid"), lit("")))
         else withNg.withColumn("bid", lit(""))
-      full.write.parquet(tmp)
+      full.write.parquet(p(StateTable.Buckets))
     }
     dsirMigrationChecked.add(statePath)
   }
@@ -1607,8 +1587,7 @@ object TextAnalysis {
                               knownBids: Option[scala.collection.Set[String]] = None): Unit = {
     val spark = cells.sparkSession
     migrateDsirStateIfNeeded(spark, statePath)
-    val dir = new org.apache.hadoop.fs.Path(s"$statePath/buckets")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = StateTable(spark, statePath)
     // the replay check: a caller holding a pre-read bid snapshot (the
     // daily turn reads the state ONCE via dsirStateSummary) answers it
     // as a set lookup; anyone else pays one small read. The snapshot is
@@ -1617,15 +1596,13 @@ object TextAnalysis {
     // are missing from it too, so exactly the unwritten ones land.
     if (checkReplay && (knownBids match {
       case Some(bids) => bids.contains(bid)
-      case None => fs.exists(dir) &&
-        !spark.read.parquet(dir.toString)
-          .filter(col("bid") === bid).limit(1).isEmpty
+      case None => st.exists(StateTable.Buckets) &&
+        !dsirCells(spark, statePath).filter(col("bid") === bid).limit(1).isEmpty
     })) return
-    cells
+    st.append(StateTable.Buckets, cells
       .withColumn("nb", lit(buckets))
       .withColumn("ng", lit(ngram))
-      .withColumn("bid", lit(bid))
-      .write.mode("append").parquet(dir.toString)
+      .withColumn("bid", lit(bid)))
   }
 
   /** RETRACT a previously persisted batch's contribution from the
@@ -1664,6 +1641,11 @@ object TextAnalysis {
       statePath, buckets, ngram, s"retract:$batchId", batchId.nonEmpty, knownBids)
   }
 
+  /** The persisted DSIR cells (b, tc, sc, nb, ng, bid) of a state root. */
+  private[graft] def dsirCells(spark: org.apache.spark.sql.SparkSession,
+                               statePath: String): DataFrame =
+    spark.read.parquet(StateTable(spark, statePath).path(StateTable.Buckets))
+
   /** The (buckets, ngram) stamp a persisted DSIR state table was
     * written under — for a MAINTAINER (e.g. the daily loop's DSIR
     * tier) that must append/retract at exactly the writer's params
@@ -1675,7 +1657,7 @@ object TextAnalysis {
   def dsirStateParams(spark: org.apache.spark.sql.SparkSession,
                       statePath: String): (Int, Int) = {
     migrateDsirStateIfNeeded(spark, statePath)
-    val params = spark.read.parquet(s"$statePath/buckets")
+    val params = dsirCells(spark, statePath)
       .select(col("nb"), col("ng")).distinct()
       .collect().map(r => (r.getInt(0), r.getInt(1)))
     require(params.length == 1,
@@ -1700,7 +1682,7 @@ object TextAnalysis {
   def dsirStateSummary(spark: org.apache.spark.sql.SparkSession,
                        statePath: String): (Int, Int, Set[String]) = {
     migrateDsirStateIfNeeded(spark, statePath)
-    val rows = spark.read.parquet(s"$statePath/buckets")
+    val rows = dsirCells(spark, statePath)
       .select(col("nb"), col("ng"), col("bid")).distinct()
       .collect()
     val params = rows.map(r => (r.getInt(0), r.getInt(1))).distinct
@@ -1732,7 +1714,7 @@ object TextAnalysis {
     require(buckets >= 2, s"buckets must be >= 2 (got $buckets)")
     require(ngram >= 1, s"ngram must be >= 1 (got $ngram)")
     migrateDsirStateIfNeeded(spark, statePath)
-    val raw = spark.read.parquet(s"$statePath/buckets")
+    val raw = dsirCells(spark, statePath)
     // ONE bounded driver collect serves both the params validation and
     // the ratio table: the state aggregates to ≤ buckets rows per
     // (nb, ng) combo, so collecting the grouped sums costs the single

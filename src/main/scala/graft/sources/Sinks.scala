@@ -255,77 +255,6 @@ object Sinks {
     df.write.mode(SaveMode.Append).format("jdbc")
       .option("url", url).option("dbtable", table).save()
 
-  /** The compact-or-not DECISION input for a tombstoned state table
-    * (signature / IVF-assignment / PQ-code layouts all share the
-    * `<table dir> + sibling tombstones dir` shape): visible rows,
-    * outstanding tombstone rows, and their ratio — the number an
-    * operator compares against a cadence threshold, because the
-    * tombstone tier's read tax and its anti-join's broadcastability
-    * are both bounded by how many tombstones accumulate between
-    * compactions (SCALING.md round 12). Two cheap count jobs; no
-    * driver-side data.
-    */
-  def tombstoneStats(spark: org.apache.spark.sql.SparkSession,
-                     tablePath: String, tombstonePath: String): (Long, Long, Double) = {
-    val t = new org.apache.hadoop.fs.Path(tombstonePath)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val raw = spark.read.parquet(tablePath)
-    if (!fs.exists(t)) (raw.count(), 0L, 0.0)
-    else {
-      // live = the exact merge-on-read count (a tombstone can shadow
-      // several duplicate stored rows, and a spent one shadows none —
-      // subtraction would only estimate). Join on the COMMON columns:
-      // the sig/IVF/PQ tombstones carry the full row, but the encoded
-      // tier's are deliberately scalar-only (doc_id, fp) so its
-      // merge-on-read anti-join broadcasts scalars — the stats view
-      // must apply the same shadowing rule each tier's reader uses.
-      val tombDf = spark.read.parquet(tombstonePath)
-      val joinCols = raw.columns.filter(tombDf.columns.toSet)
-      val tombs = tombDf.count()
-      val live = raw.join(tombDf, joinCols.toSeq, "left_anti").count()
-      // live == 0 with outstanding tombstones is the WORST case, not a
-      // clean one (every stored row is shadowed; the read-side
-      // anti-join tax is maximal) — the fraction must always trip the
-      // cadence gate, not divide-by-zero its way past it
-      val frac =
-        if (live > 0) tombs.toDouble / live
-        else if (tombs > 0) Double.PositiveInfinity
-        else 0.0
-      (live, tombs, frac)
-    }
-  }
-
-  /** The GATE-grade form of [[tombstoneStats]]: two raw row counts
-    * (parquet footer statistics — no anti-join job) and the
-    * CONSERVATIVE fraction `tombs / max(raw − tombs, 0)`. Because a
-    * tombstone shadows at least zero and at most several stored rows,
-    * `raw − tombs` lower-bounds the true live count and the fraction
-    * upper-bounds the true one — a cadence gate reading it can only
-    * fire EARLY, and an early compaction is semantically free (state ≡
-    * fresh build either way). This is the form the per-turn hot path
-    * AND the run manifest use BY DESIGN (the manifest's live counts
-    * are documented lower bounds — the audit row needs the turn's
-    * gate inputs, not a census, and the anti-join would double the
-    * turn's maintenance cost); callers that need the exact
-    * merge-on-read live count go to [[tombstoneStats]] directly.
-    */
-  def tombstoneStatsFast(spark: org.apache.spark.sql.SparkSession,
-                         tablePath: String, tombstonePath: String): (Long, Long, Double) = {
-    val t = new org.apache.hadoop.fs.Path(tombstonePath)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val raw = spark.read.parquet(tablePath).count()
-    if (!fs.exists(t)) (raw, 0L, 0.0)
-    else {
-      val tombs = spark.read.parquet(tombstonePath).count()
-      val liveLower = math.max(raw - tombs, 0L)
-      val frac =
-        if (liveLower > 0) tombs.toDouble / liveLower
-        else if (tombs > 0) Double.PositiveInfinity
-        else 0.0
-      (liveLower, tombs, frac)
-    }
-  }
-
   /** Lake maintenance: compact a parquet directory's small files into
     * ~`targetFileMb`-sized ones. Daily appends ([[appendPartitioned]],
     * streaming sinks, [[graft.operators.Similarity.appendToIvfIndex]])
@@ -335,8 +264,10 @@ object Sinks {
     * `repartition(n)` sized from the directory's actual byte count
     * (round-robin — preserves nothing, so do NOT compact layouts that
     * encode order, [[writeSorted]]/[[writeZOrdered]]; re-run those
-    * writers instead, same cost). Writes to a temp sibling then
-    * atomically swaps, so a crashed compaction never loses data.
+    * writers instead, same cost). Writes to a temp sibling, then swaps
+    * it in by two renames: a crash between them leaves the data at
+    * `<path>_precompact` (recoverable, never lost), and the next
+    * compact refuses to run until an operator recovers it.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetFileMb: Int = 256, partitionCols: Seq[String] = Nil): Unit = {
@@ -354,38 +285,6 @@ object Sinks {
       s"$path is hive-partitioned; pass partitionCols so compaction preserves the layout")
     val bytes = fs.getContentSummary(hadoopPath).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / (targetFileMb * 1024.0 * 1024.0)).toInt)
-    swapRewrite(spark, path) { tmp =>
-      // partitioned layouts cluster by the partition key (one task — and
-      // so one compacted file — per live partition, the point of
-      // compacting a daily-append table); flat layouts round-robin to
-      // the byte-derived file count
-      val reshaped =
-        if (partitionCols.nonEmpty)
-          spark.read.parquet(path).repartition(partitionCols.map(col): _*)
-        else spark.read.parquet(path).repartition(n)
-      val writer = reshaped.write.mode(SaveMode.Overwrite)
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .parquet(tmp)
-    }
-  }
-
-  /** The write-new + swap protocol shared by [[compact]] and the
-    * stale-key state compactions
-    * ([[graft.operators.Dedup.compactSignatures]],
-    * [[graft.operators.Similarity.compactIvfIndex]]): `write` produces
-    * the replacement table at a temp sibling — the live table at
-    * `path` stays fully readable for the whole (possibly long)
-    * rewrite, which matters because the rewrite plan usually READS the
-    * very table it replaces — and the swap then runs as two renames.
-    * A reader holds a consistent table at every instant except the
-    * two-rename window, where a crash leaves the data at
-    * `<path>_precompact`: recoverable, never lost. Appends racing the
-    * swap are the caller's lock to take.
-    */
-  def swapRewrite(spark: org.apache.spark.sql.SparkSession, path: String)
-                 (write: String => Unit): Unit = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(path + "_compacting")
     val bak = new org.apache.hadoop.fs.Path(path + "_precompact")
     // refuse to run over a previous compaction's debris: a leftover
@@ -395,11 +294,23 @@ object Sinks {
     require(!fs.exists(bak),
       s"$bak exists — a previous compact was interrupted; recover it (rename back or delete) first")
     require(!fs.exists(tmp) || fs.delete(tmp, true), s"could not clear stale $tmp")
-    write(tmp.toString)
+    // partitioned layouts cluster by the partition key (one task — and
+    // so one compacted file — per live partition, the point of
+    // compacting a daily-append table); flat layouts round-robin to
+    // the byte-derived file count
+    val reshaped =
+      if (partitionCols.nonEmpty)
+        spark.read.parquet(path).repartition(partitionCols.map(col): _*)
+      else spark.read.parquet(path).repartition(n)
+    val writer = reshaped.write.mode(SaveMode.Overwrite)
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+      .parquet(tmp.toString)
     // Hadoop rename reports failure as `false`, not an exception —
     // check both. The two-rename window is NOT atomic: a crash in
     // between leaves the data at `_precompact` (recoverable, never
-    // lost).
+    // lost). Persisted state tiers commit through
+    // [[graft.sources.StateTable]] instead; this directory is read
+    // directly by outside readers, so it keeps its plain name.
     require(fs.rename(hadoopPath, bak), s"rename $hadoopPath -> $bak failed")
     if (!fs.rename(tmp, hadoopPath)) {
       fs.rename(bak, hadoopPath) // roll back so readers keep working

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.TextAnalysis
+import graft.sources.StateTable
 
 /** Streaming front of the DSIR distribution state: arriving documents
   * append their bucket counts micro-batch by micro-batch. The state is
@@ -74,17 +75,14 @@ object DsirStream {
     * outliving its checkpoint — a multi-file-grouped state cannot be
     * migrated file-wise; rebuild it). Idempotent: a state with no
     * positional bids returns without touching storage. The rewrite
-    * goes through [[graft.sources.Sinks.swapRewrite]]: a crash
-    * between its two renames leaves the table recoverable at
-    * `buckets_precompact` (never silently half-migrated — see
-    * swapRewrite's recovery contract), and a re-run aborts on that
-    * leftover until the operator recovers it.
+    * commits a new generation ([[graft.sources.StateTable.commit]]), so
+    * a crash leaves the state either unmigrated or migrated, and a
+    * re-run converges.
     */
   def migratePositionalBids(spark: SparkSession, feedDir: String,
                             statePath: String): Unit = {
     import org.apache.spark.sql.functions._
-    val bucketsDir = s"$statePath/buckets"
-    val positional = spark.read.parquet(bucketsDir)
+    val positional = TextAnalysis.dsirCells(spark, statePath)
       .select(col("bid")).distinct().collect().map(_.getString(0))
       .filter(_.matches("persist:stream:\\d+"))
       .map(b => b.substring("persist:stream:".length).toLong -> b)
@@ -131,7 +129,7 @@ object DsirStream {
     // the migration instead of silently stamping a partial prefix.
     val (nb, ng) = TextAnalysis.dsirStateParams(spark, statePath)
     val positionalBidSet = positional.map(_._2).toSet
-    val stateTotals = spark.read.parquet(bucketsDir)
+    val stateTotals = TextAnalysis.dsirCells(spark, statePath)
       .filter(col("bid").isin(positionalBidSet.toSeq: _*))
       .groupBy(col("bid"))
       .agg((sum(col("tc")) + sum(col("sc"))).as("total"))
@@ -160,11 +158,11 @@ object DsirStream {
           "non-empty but the old drain stamped no bid for batch " +
           s"$n — the batch-to-file numbering is inconsistent; rebuild the state instead")
     }
-    graft.sources.Sinks.swapRewrite(spark, bucketsDir) { tmp =>
+    StateTable(spark, statePath).commit(StateTable.Buckets) { p =>
       val m = typedLit(mapping)
-      spark.read.parquet(bucketsDir)
+      TextAnalysis.dsirCells(spark, statePath)
         .withColumn("bid", coalesce(element_at(m, col("bid")), col("bid")))
-        .write.parquet(tmp)
+        .write.parquet(p(StateTable.Buckets))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.StateTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -303,28 +304,22 @@ object TurnStream {
   private[streaming] def latestPairsManifest(spark: SparkSession,
                                              pairsOut: String): PairsManifest = {
     val dir = new org.apache.hadoop.fs.Path(s"$pairsOut/_pairs_manifest")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return PairsManifest(0L, None, Set.empty)
-    val versions = fs.listStatus(dir).toSeq.filter(_.isFile)
-      .map(_.getPath.getName).filter(_.matches("v\\d+\\.manifest"))
-      .map(_.stripPrefix("v").stripSuffix(".manifest").toLong)
-    if (versions.isEmpty) return PairsManifest(0L, None, Set.empty)
-    val v = versions.max
-    val in = fs.open(new org.apache.hadoop.fs.Path(dir, s"v$v.manifest"))
-    val lines = try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-    finally in.close()
-    PairsManifest(v, Some(s"$pairsOut/${lines.head}"),
-      lines.tail.filter(_.nonEmpty).toSet)
+    StateTable.readManifest(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir) match {
+      case Some((v, lines)) => PairsManifest(v, Some(s"$pairsOut/${lines.head}"), lines.tail.toSet)
+      case None => PairsManifest(0L, None, Set.empty)
+    }
   }
 
   /** Fold the accumulated per-batch pair directories into ONE
     * compacted base table without losing the replay-skip markers —
     * the small-file/listing fix for feeds whose drain cadence
     * accumulates thousands of `batch_*` directories (the same problem
-    * [[graft.sources.Sinks.compact]] solves for the state tiers, with
+    * [[graft.sources.Sinks.compact]] solves for lake tables, with
     * one extra constraint: each directory's _SUCCESS doubles as its
     * batch's exactly-once marker, so deleting it must move the
-    * batch's digest into a manifest the skip still consults).
+    * batch's digest into a manifest the skip still consults). The
+    * manifest files are [[graft.sources.StateTable]]'s versioned
+    * manifests; the digest lines are this sink's own payload.
     *
     * Protocol (single writer per pairs sink, crash-safe at every
     * step): write the new base `_pairs_base/v<N+1>` = old base ∪ the
@@ -375,15 +370,8 @@ object TurnStream {
       spark.read.schema(PairsSchema).parquet(srcs: _*)
         .coalesce(n).write.parquet(newBase.toString)
       val bids = m.bids ++ fold.map(_.getPath.getName.stripPrefix("batch_"))
-      val mdir = new org.apache.hadoop.fs.Path(s"$pairsOut/_pairs_manifest")
-      fs.mkdirs(mdir)
-      val tmp = new org.apache.hadoop.fs.Path(mdir, s"v$next.manifest.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        (newBaseRel +: bids.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(mdir, s"v$next.manifest")),
-        s"manifest rename failed for $pairsOut v$next")
+      StateTable.writeManifest(fs, new org.apache.hadoop.fs.Path(s"$pairsOut/_pairs_manifest"),
+        next, newBaseRel +: bids.toSeq.sorted)
     }
     // GC against the NOW-current manifest (idempotent: a crashed prior
     // compaction's debris is re-collected here)
@@ -396,11 +384,8 @@ object TurnStream {
       for (b <- fs.listStatus(baseRoot)
            if !cur.base.contains(s"$pairsOut/_pairs_base/${b.getPath.getName}"))
         fs.delete(b.getPath, true)
-    val mdir = new org.apache.hadoop.fs.Path(s"$pairsOut/_pairs_manifest")
-    if (fs.exists(mdir))
-      for (f <- fs.listStatus(mdir); name = f.getPath.getName
-           if name != s"v${cur.version}.manifest")
-        fs.delete(f.getPath, true)
+    StateTable.gcManifests(fs, new org.apache.hadoop.fs.Path(s"$pairsOut/_pairs_manifest"),
+      cur.version)
   }
 
   /** The accumulated pair emissions of a [[dailyTurns]] drain, in the

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Validation
+import graft.sources.StateTable
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end runs of the three composed pipelines (SURVEY.md §5.2
@@ -10,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PipelinesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private def member(root: String, m: String): String = StateTable(spark, root).path(m)
   import spark.implicits._
 
   private def tmp = Files.createTempDirectory("graft-pipe").toString
@@ -48,6 +50,43 @@ class PipelinesSpec extends AnyFunSuite {
     assert(json.contains("\"date_range\":\"2024-01-10 to 2024-01-10\""))
     val back = spark.read.parquet(s"$dir/tbl")
     assert(back.count() == 2 && back.columns.contains("timestamp"))
+  }
+
+  /** `n` plays, one minute apart from `start`, in pages of 50. */
+  private def plays(start: String, n: Int): Seq[String] = {
+    val t0 = java.time.Instant.parse(start)
+    (0 until n).map { i =>
+      s"""{"played_at":"${t0.plusSeconds(60L * i)}","track":{"id":"t$i","name":"S$i",
+         |"popularity":${i % 100},"duration_ms":${180000 + i},"explicit":${i % 2 == 0},
+         |"artists":[{"id":"ar${i % 7}","name":"A${i % 7}"}]}}""".stripMargin.replaceAll("\n", "")
+    }.grouped(50).map(items => s"""{"items":[${items.mkString(",")}]}""").toSeq
+  }
+
+  test("EP2 is exactly-once under retry: a re-run, a late page and a torn first run") {
+    val table = s"$tmp/tbl"
+    val asOf = java.sql.Date.valueOf("2024-01-12")
+    // the feed straddles two days, so the retry reads two partitions
+    val feed = plays("2024-01-10T22:00:00Z", 150)
+    val first = Pipelines.recentlyPlayedEtl(spark, feed.toDS(), table, asOf)
+    assert(first.contains("\"tracks_processed\":150") && first.contains("\"rows_appended\":150"))
+    val retry = Pipelines.recentlyPlayedEtl(spark, feed.toDS(), table, asOf)
+    assert(retry.contains("\"tracks_processed\":150") && retry.contains("\"rows_appended\":0"))
+    assert(spark.read.parquet(table).count() === 150L, "a retry must append nothing")
+    // a late page whose plays predate the newest stored one still lands
+    val late = plays("2024-01-10T08:00:00Z", 20)
+    assert(Pipelines.recentlyPlayedEtl(spark, late.toDS(), table, asOf)
+      .contains("\"rows_appended\":20"))
+    assert(spark.read.parquet(table).count() === 170L)
+    // a first run that died after writing one page: the re-run lands
+    // exactly the missing rows
+    val torn = s"$tmp/tbl"
+    graft.sources.Sinks.appendPartitioned(
+      graft.operators.SpotifyFlatten.recentlyPlayed(graft.sources.SpotifySchemas.parse(
+        feed.take(1).toDS(), graft.sources.SpotifySchemas.recentlyPlayedPayload)), torn)
+    assert(Pipelines.recentlyPlayedEtl(spark, feed.toDS(), torn, asOf)
+      .contains("\"rows_appended\":100"))
+    val back = spark.read.parquet(torn)
+    assert(back.count() === 150L && back.select("played_at").distinct().count() === 150L)
   }
 
   test("EP2 end-to-end: duplicate PK raises BEFORE anything is written") {
@@ -130,13 +169,13 @@ class PipelinesSpec extends AnyFunSuite {
     Dedup.persistMinhashSignatures(docs, 3, 16, 4, s"$dir/mh_full")
     def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    assert(same(spark.read.parquet(s"$dir/mh/sigs"), spark.read.parquet(s"$dir/mh_full/sigs")),
+    assert(same(spark.read.parquet(member(s"$dir/mh", StateTable.Sigs)), spark.read.parquet(member(s"$dir/mh_full", StateTable.Sigs))),
       "incremental signature state must equal the full rebuild")
     // 3. the appended IVF index equals a full day-2 rebuild (same
     //    deterministic centroids: day 1 contained vec_id < 16)
     Similarity.buildIvfIndex(emb, nlist = 16, path = s"$dir/ivf_full")
-    assert(same(spark.read.parquet(s"$dir/ivf/assignments"),
-      spark.read.parquet(s"$dir/ivf_full/assignments")),
+    assert(same(spark.read.parquet(member(s"$dir/ivf", StateTable.Assignments)),
+      spark.read.parquet(member(s"$dir/ivf_full", StateTable.Assignments))),
       "appended IVF assignments must equal the full rebuild")
     // 4. and the new pairs are the full day-2 estimator pairs that
     //    touch an added endpoint (old-old pairs never re-emitted)
@@ -189,7 +228,7 @@ class PipelinesSpec extends AnyFunSuite {
     assert(same(out("dedup_pairs"), fullPairs),
       "from-empty pairs must equal the added-endpoint slice of the full run")
     Dedup.persistMinhashSignatures(docs, 3, 16, 4, s"$dir/mh_full")
-    assert(same(spark.read.parquet(s"$dir/mh/sigs"), spark.read.parquet(s"$dir/mh_full/sigs")),
+    assert(same(spark.read.parquet(member(s"$dir/mh", StateTable.Sigs)), spark.read.parquet(member(s"$dir/mh_full", StateTable.Sigs))),
       "state after the from-empty turn must equal the full rebuild")
   }
 

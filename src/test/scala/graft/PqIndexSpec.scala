@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.Similarity
+import graft.sources.StateTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PqIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private def member(root: String, m: String): String = StateTable(spark, root).path(m)
 
   private val sf = "/root/testdata/sf0.001"
   private def embs = Tables.load(spark, sf, "embeddings")
@@ -40,21 +42,21 @@ class PqIndexSpec extends AnyFunSuite {
     val cut = ids(ids.length * 3 / 5)
     // day 0: build on the first 60% (contains the ks codebook seeds)
     Similarity.buildPqIndex(embs.filter($"vec_id" <= cut), m = 8, ks = 16, path = dir)
-    val cbBefore = spark.read.parquet(s"$dir/codebooks").collect().toSet
+    val cbBefore = spark.read.parquet(member(dir, StateTable.Codebooks)).collect().toSet
     // day 1: append the rest — only the new batch is encoded (m is
     // read from the index itself, so it cannot disagree with it)
     Similarity.appendToPqIndex(embs.filter($"vec_id" > cut), spark, path = dir)
-    assert(spark.read.parquet(s"$dir/codebooks").collect().toSet === cbBefore,
+    assert(spark.read.parquet(member(dir, StateTable.Codebooks)).collect().toSet === cbBefore,
       "append must not touch the codebooks")
     // reference: the SAME frozen codebooks, the whole corpus encoded in one shot
-    spark.read.parquet(s"$dir/codebooks").write.parquet(s"$oneShot/codebooks")
+    spark.read.parquet(member(dir, StateTable.Codebooks)).write.parquet(member(oneShot, StateTable.Codebooks))
     Similarity.appendToPqIndex(embs, spark, path = oneShot)
-    val incremental = spark.read.parquet(s"$dir/codes").orderBy("vec_id").collect().toSeq
-    val reference = spark.read.parquet(s"$oneShot/codes").orderBy("vec_id").collect().toSeq
+    val incremental = spark.read.parquet(member(dir, StateTable.Codes)).orderBy("vec_id").collect().toSeq
+    val reference = spark.read.parquet(member(oneShot, StateTable.Codes)).orderBy("vec_id").collect().toSeq
     assert(incremental === reference)
     // every corpus vector encoded exactly once
-    assert(spark.read.parquet(s"$dir/codes").count() === ids.length.toLong)
-    assert(spark.read.parquet(s"$dir/codes")
+    assert(spark.read.parquet(member(dir, StateTable.Codes)).count() === ids.length.toLong)
+    assert(spark.read.parquet(member(dir, StateTable.Codes))
       .groupBy($"vec_id").count().filter($"count" > 1).count() === 0)
   }
 
@@ -63,7 +65,7 @@ class PqIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_pq_codes").toString + "/idx"
     Similarity.buildPqIndex(embs, m = 8, ks = 16, path = dir)
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = spark.read.parquet(member(dir, StateTable.Codes))
     val el = codes.schema("codes").dataType.asInstanceOf[ArrayType].elementType
     assert(el === ShortType, s"codes must be smallint-typed, got $el")
     assert(codes.select(size($"codes")).as[Int].collect().forall(_ == 8))

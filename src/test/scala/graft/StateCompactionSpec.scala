@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Dedup, Similarity}
+import graft.sources.StateTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,18 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * half the daily loop's append-only contract defers: compaction must
   * leave state EQUAL to a fresh full build over the current corpus
   * (the equality the q151 oracle defines, here asserted table-level),
-  * heal removed keys without a worklist, and refuse to run over a
-  * previous crash's debris instead of cascading into data loss.
+  * and heal removed keys without a worklist. Crash windows of the
+  * commit itself are StateTableSpec's.
   */
 class StateCompactionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private def member(root: String, m: String): String = StateTable(spark, root).path(m)
 
   private val sf = "/root/testdata/sf0.001"
   private def docs = Tables.load(spark, sf, "documents")
   private def embs = Tables.load(spark, sf, "embeddings")
 
   private def sigRows(path: String): Set[Seq[Any]] =
-    spark.read.parquet(path + "/sigs").collect().toSet[org.apache.spark.sql.Row]
+    spark.read.parquet(member(path, StateTable.Sigs)).collect().toSet[org.apache.spark.sql.Row]
       .map(r => r.toSeq)
 
   test("signature compaction heals edits, removals and lost appends to a fresh-build state") {
@@ -41,16 +43,16 @@ class StateCompactionSpec extends AnyFunSuite {
     // temp table so the append never races its own scan)
     val dupBatch = docs.filter(col("doc_id") % 7 === 1)
     val dupTmp = Files.createTempDirectory("graft_sig_dup").toString + "/d"
-    spark.read.parquet(state + "/sigs")
+    spark.read.parquet(member(state, StateTable.Sigs))
       .join(dupBatch.select("doc_id"), Seq("doc_id"), "left_semi")
       .write.parquet(dupTmp)
-    spark.read.parquet(dupTmp).write.mode("append").parquet(state + "/sigs")
+    spark.read.parquet(dupTmp).write.mode("append").parquet(member(state, StateTable.Sigs))
 
     Dedup.compactSignatures(docs, 3, 16, 4, state, changed.select("doc_id"))
     Dedup.persistMinhashSignatures(docs, 3, 16, 4, fresh)
     assert(sigRows(state) === sigRows(fresh))
     // the ghosts are gone even though the worklist never named them
-    assert(spark.read.parquet(state + "/sigs")
+    assert(spark.read.parquet(member(state, StateTable.Sigs))
       .filter(col("doc_id") >= 1000000).count() === 0)
   }
 
@@ -86,7 +88,7 @@ class StateCompactionSpec extends AnyFunSuite {
     Similarity.appendToIvfIndex(stale, spark, idx)
     Similarity.buildIvfIndex(embs, nlist = 16, path = full)
     // table-level: assignments identical as (vec_id, cell, u) sets
-    def rows(p: String) = spark.read.parquet(p + "/assignments")
+    def rows(p: String) = spark.read.parquet(member(p, StateTable.Assignments))
       .select(col("vec_id"), col("cell").cast("long"),
         col("u").cast("array<double>"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
@@ -116,10 +118,10 @@ class StateCompactionSpec extends AnyFunSuite {
       ghosts.select("vec_id").unionByName(stale.select("vec_id")))
     // reference: one-shot encode of the current corpus against the SAME
     // codebooks (copy them, then append-encode into an empty code table)
-    val cb = spark.read.parquet(idx + "/codebooks")
-    cb.write.parquet(ref + "/codebooks")
+    val cb = spark.read.parquet(member(idx, StateTable.Codebooks))
+    cb.write.parquet(member(ref, StateTable.Codebooks))
     Similarity.appendToPqIndex(embs, spark, ref)
-    def codeRows(p: String) = spark.read.parquet(p + "/codes")
+    def codeRows(p: String) = spark.read.parquet(member(p, StateTable.Codes))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(codeRows(idx) === codeRows(ref))
     // and through the probe path
@@ -156,7 +158,7 @@ class StateCompactionSpec extends AnyFunSuite {
     graft.operators.Dedup.persistMinhashSignatures(docs, 3, 16, 4, freshSig)
     assert(sigRows(st + "/mh") === sigRows(freshSig))
     Similarity.buildIvfIndex(embs, nlist = 16, path = freshIvf)
-    def assignRows(p: String) = spark.read.parquet(p + "/assignments")
+    def assignRows(p: String) = spark.read.parquet(member(p, StateTable.Assignments))
       .select(col("vec_id"), col("cell").cast("long"), col("u").cast("array<double>"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(assignRows(st + "/ivf") === assignRows(freshIvf))
@@ -188,7 +190,7 @@ class StateCompactionSpec extends AnyFunSuite {
     // compaction folds the tombstones into the rewrite and spends them
     Dedup.compactSignatures(docs, 3, 16, 4, state, docs.limit(0).select("doc_id"))
     assert(sigRows(state) === sigRows(fresh))
-    assert(!new java.io.File(state + "/tombstones").exists())
+    assert(!StateTable(spark, state).hasTombstones)
   }
 
   test("IVF tombstones: merge-on-read view equals a fresh build; compaction folds and clears them") {
@@ -214,7 +216,7 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(healed.collect().toSeq === pristine.collect().toSeq)
     Similarity.compactIvfIndex(spark, idx, embs.limit(0).select("vec_id"))
     assert(viewRows(idx) === viewRows(fresh))
-    assert(!new java.io.File(idx + "/tombstones").exists())
+    assert(!StateTable(spark, idx).hasTombstones)
   }
 
   test("PQ tombstones: healed view equals a one-shot encode against the persisted codebooks") {
@@ -233,17 +235,17 @@ class StateCompactionSpec extends AnyFunSuite {
     Similarity.appendToPqIndex(day0, spark, idx)
     Similarity.tombstonePqIndex(changed, spark, idx, ghosts.select("vec_id"))
     // reference: same codebooks, one-shot encode of the current corpus
-    spark.read.parquet(idx + "/codebooks").write.parquet(ref + "/codebooks")
+    spark.read.parquet(member(idx, StateTable.Codebooks)).write.parquet(member(ref, StateTable.Codebooks))
     Similarity.appendToPqIndex(embs, spark, ref)
     val healed = Similarity.pqTopKIndexed(embs, spark, idx, nQueries = 4, k = 6, rerank = 24)
     val pristine = Similarity.pqTopKIndexed(embs, spark, ref, nQueries = 4, k = 6, rerank = 24)
     assert(healed.collect().toSeq === pristine.collect().toSeq)
     // compaction folds the tombstones away and the raw table matches
     Similarity.compactPqIndex(spark, idx, embs.limit(0).select("vec_id"))
-    def codeRows(p: String) = spark.read.parquet(p + "/codes")
+    def codeRows(p: String) = spark.read.parquet(member(p, StateTable.Codes))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(codeRows(idx) === codeRows(ref))
-    assert(!new java.io.File(idx + "/tombstones").exists())
+    assert(!StateTable(spark, idx).hasTombstones)
   }
 
   test("recentering from state heals an edited centroid vector to a fresh-build index") {
@@ -263,18 +265,18 @@ class StateCompactionSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(day0, nlist = 16, path = idx)
     Similarity.tombstoneIvfIndex(changed, spark, idx, ghosts.select("vec_id"))
     Similarity.buildIvfIndex(embs, nlist = 16, path = fresh)
-    def rows(p: String, part: String) = spark.read.parquet(s"$p/$part")
-      .select(spark.read.parquet(s"$fresh/$part").columns.map(c =>
+    def rows(p: String, part: String) = spark.read.parquet(member(p, part))
+      .select(spark.read.parquet(member(fresh, part)).columns.map(c =>
         if (c == "cell") col(c).cast("long") else col(c)): _*)
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     // pre-recenter: centroid 3 is stale, so the index disagrees with
     // a fresh build (if it didn't, the operator would be pointless)
-    assert(rows(idx, "centroids") !== rows(fresh, "centroids"))
+    assert(rows(idx, StateTable.Centroids) !== rows(fresh, StateTable.Centroids))
     Similarity.recenterIvfIndex(spark, idx)
-    assert(rows(idx, "centroids") === rows(fresh, "centroids"))
-    assert(rows(idx, "assignments") === rows(fresh, "assignments"))
-    assert(!new java.io.File(idx + "/tombstones").exists(),
-      "spent tombstones must vanish with the swapped-out root")
+    assert(rows(idx, StateTable.Centroids) === rows(fresh, StateTable.Centroids))
+    assert(rows(idx, StateTable.Assignments) === rows(fresh, StateTable.Assignments))
+    assert(!StateTable(spark, idx).hasTombstones,
+      "spent tombstones must vanish with the old generation")
     val healed = Similarity.cosineTopKIvfIndexed(spark, idx, nQueries = 8, k = 6, nprobe = 3)
     val pristine = Similarity.cosineTopKIvfIndexed(spark, fresh, nQueries = 8, k = 6, nprobe = 3)
     assert(healed.collect().toSeq === pristine.collect().toSeq)
@@ -352,7 +354,7 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(inline.exceptAll(fromState).isEmpty && fromState.exceptAll(inline).isEmpty)
   }
 
-  test("atomic rebuild/retrain equals a plain build and refuses a crashed swap's debris") {
+  test("atomic rebuild/retrain equals a plain build") {
     val ivf = Files.createTempDirectory("graft_rebuild_ivf").toString + "/idx"
     val pq = Files.createTempDirectory("graft_retrain_pq").toString + "/idx"
     val refIvf = Files.createTempDirectory("graft_rebuild_ivf_ref").toString + "/idx"
@@ -370,13 +372,6 @@ class StateCompactionSpec extends AnyFunSuite {
     val c = Similarity.pqTopKIndexed(embs, spark, pq, nQueries = 4, k = 6, rerank = 24)
     val d = Similarity.pqTopKIndexed(embs, spark, refPq, nQueries = 4, k = 6, rerank = 24)
     assert(c.collect().toSeq === d.collect().toSeq)
-    // a crashed previous swap (leftover _precompact backup) must stop
-    // the next rebuild loudly, same as every swapRewrite site
-    new java.io.File(ivf + "_precompact").mkdirs()
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.rebuildIvfIndex(embs, spark, nlist = 16, path = ivf)
-    }
-    assert(ex.getMessage.contains("_precompact"))
   }
 
   test("tombstone heal is idempotent: full-duplicate retry and mid-crash retry both converge") {
@@ -446,7 +441,7 @@ class StateCompactionSpec extends AnyFunSuite {
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     def pqView() = Similarity.loadPqIndex(spark, st + "/pq")._2
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
-    def dsirCells() = spark.read.parquet(st + "/dsir/buckets")
+    def dsirCells() = spark.read.parquet(member(st + "/dsir", StateTable.Buckets))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     def encView() = graft.operators.TextAnalysis.loadEncodedCorpus(spark, st + "/enc")
       .select(col("doc_id"), col("fp"), col("ids").cast("string"), col("n_tokens"))
@@ -478,7 +473,7 @@ class StateCompactionSpec extends AnyFunSuite {
     // and the loop-fed PQ tier equals a one-shot encode of the current
     // corpus against the same codebooks
     val ref = Files.createTempDirectory("graft_daily_retry_pqref").toString + "/idx"
-    spark.read.parquet(st + "/pq/codebooks").write.parquet(ref + "/codebooks")
+    spark.read.parquet(member(st + "/pq", StateTable.Codebooks)).write.parquet(member(ref, StateTable.Codebooks))
     Similarity.appendToPqIndex(embs, spark, ref)
     assert(pqView() === Similarity.loadPqIndex(spark, ref)._2
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq))
@@ -501,7 +496,7 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(!Dedup.compactSignaturesIfNeeded(
       docs.filter(col("doc_id") =!= 1L).unionByName(small), 3, 16, 4, state, none),
       "under-threshold heal must not trigger the rewrite")
-    assert(new java.io.File(state + "/tombstones").exists(),
+    assert(StateTable(spark, state).hasTombstones,
       "tombstones must survive a skipped compaction")
     // a 20% edit wave pushes past the threshold
     val wave = rewritten(docs.filter(col("doc_id") % 5 === 0), "v3")
@@ -510,7 +505,7 @@ class StateCompactionSpec extends AnyFunSuite {
       .unionByName(small).unionByName(wave)
     assert(Dedup.compactSignaturesIfNeeded(current, 3, 16, 4, state, none),
       "over-threshold backlog must trigger the rewrite")
-    assert(!new java.io.File(state + "/tombstones").exists())
+    assert(!StateTable(spark, state).hasTombstones)
     // and the folded state equals a fresh build over the current corpus
     val fresh = Files.createTempDirectory("graft_sig_cadence_fresh").toString
     Dedup.persistMinhashSignatures(current, 3, 16, 4, fresh)
@@ -528,7 +523,7 @@ class StateCompactionSpec extends AnyFunSuite {
     Similarity.tombstoneIvfIndex(vecWave, spark, idx, none2)
     assert(Similarity.compactIvfIndexIfNeeded(spark, idx, none2),
       "a 25% edit wave must trigger the IVF rewrite")
-    assert(!new java.io.File(idx + "/tombstones").exists())
+    assert(!StateTable(spark, idx).hasTombstones)
     val pq = Files.createTempDirectory("graft_pq_cadence").toString + "/idx"
     Similarity.buildPqIndex(embs, m = 8, ks = 16, path = pq)
     assert(!Similarity.compactPqIndexIfNeeded(spark, pq, none2),
@@ -536,7 +531,7 @@ class StateCompactionSpec extends AnyFunSuite {
     Similarity.tombstonePqIndex(vecWave, spark, pq, none2)
     assert(Similarity.compactPqIndexIfNeeded(spark, pq, none2),
       "a 25% edit wave must trigger the PQ rewrite")
-    assert(!new java.io.File(pq + "/tombstones").exists())
+    assert(!StateTable(spark, pq).hasTombstones)
   }
 
   test("merge-on-read views plan a broadcast anti-join (and nothing at all when tombstone-free)") {
@@ -568,8 +563,7 @@ class StateCompactionSpec extends AnyFunSuite {
     // anti-join tax is at its maximum. tombs/live would divide by zero;
     // the stats must report a gate-firing fraction, not 0.0
     Dedup.tombstoneSignatures(few.limit(0), 3, 16, 4, state, few.select("doc_id"))
-    val (live, tombs, frac) = graft.sources.Sinks.tombstoneStats(
-      spark, state + "/sigs", state + "/tombstones")
+    val (live, tombs, frac) = StateTable(spark, state).stats(StateTable.Sigs)
     assert(live === 0L && tombs > 0L,
       s"staging broke: expected a fully-tombstoned table (live=$live tombs=$tombs)")
     assert(frac > 0.1, s"live=0 with outstanding tombstones must fire the gate (frac=$frac)")
@@ -577,7 +571,7 @@ class StateCompactionSpec extends AnyFunSuite {
     val successor = docs.filter(col("doc_id") >= 8 && col("doc_id") < 16)
     assert(Dedup.compactSignaturesIfNeeded(successor, 3, 16, 4, state, none),
       "compactSignaturesIfNeeded must trigger on a fully-tombstoned table")
-    assert(!new java.io.File(state + "/tombstones").exists())
+    assert(!StateTable(spark, state).hasTombstones)
     val fresh = Files.createTempDirectory("graft_sig_fulltomb_fresh").toString
     Dedup.persistMinhashSignatures(successor, 3, 16, 4, fresh)
     assert(sigRows(state) === sigRows(fresh))
@@ -603,11 +597,11 @@ class StateCompactionSpec extends AnyFunSuite {
       pqPath = Some(st + "/pq"))
       .values.foreach(_.write.format("noop").mode("overwrite").save())
     // the turn compacted each tier: zero outstanding tombstones
-    assert(!new java.io.File(st + "/mh/tombstones").exists(),
+    assert(!StateTable(spark, st + "/mh").hasTombstones,
       "the turn must have compacted the signature tier")
-    assert(!new java.io.File(st + "/ivf/tombstones").exists(),
+    assert(!StateTable(spark, st + "/ivf").hasTombstones,
       "the turn must have compacted the IVF tier")
-    assert(!new java.io.File(st + "/pq/tombstones").exists(),
+    assert(!StateTable(spark, st + "/pq").hasTombstones,
       "the turn must have compacted the PQ tier")
     // and each state table equals a fresh full build over today
     val freshSig = Files.createTempDirectory("graft_daily_maintain_sig").toString
@@ -615,12 +609,12 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(sigRows(st + "/mh") === sigRows(freshSig))
     val freshIvf = Files.createTempDirectory("graft_daily_maintain_ivf").toString + "/idx"
     Similarity.buildIvfIndex(embs, nlist = 16, path = freshIvf)
-    def assignRows(p: String) = spark.read.parquet(p + "/assignments")
+    def assignRows(p: String) = spark.read.parquet(member(p, StateTable.Assignments))
       .select(col("vec_id"), col("cell").cast("long"), col("u").cast("array<double>"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(assignRows(st + "/ivf") === assignRows(freshIvf))
     val pqRef = Files.createTempDirectory("graft_daily_maintain_pqref").toString + "/idx"
-    spark.read.parquet(st + "/pq/codebooks").write.parquet(pqRef + "/codebooks")
+    spark.read.parquet(member(st + "/pq", StateTable.Codebooks)).write.parquet(member(pqRef, StateTable.Codebooks))
     Similarity.appendToPqIndex(embs, spark, pqRef)
     def pqRows(p: String) = Similarity.loadPqIndex(spark, p)._2
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
@@ -635,7 +629,7 @@ class StateCompactionSpec extends AnyFunSuite {
       st2 + "/mh", st2 + "/ivf", healEdits = true, healVia = "tombstone",
       maintain = false)
       .values.foreach(_.write.format("noop").mode("overwrite").save())
-    assert(new java.io.File(st2 + "/mh/tombstones").exists(),
+    assert(StateTable(spark, st2 + "/mh").hasTombstones,
       "maintain = false must leave the tombstones for the external schedule")
   }
 
@@ -690,7 +684,7 @@ class StateCompactionSpec extends AnyFunSuite {
       Pipelines.dailyIncremental(spark, day1Docs, current, embs, embs,
         st + "/mh", st + "/ivf", healEdits = true, healVia = "tombstone",
         dsirStatePath = Some(st + "/dsir")) // deliberately NO runId
-    def cells() = spark.read.parquet(st + "/dsir/buckets")
+    def cells() = spark.read.parquet(member(st + "/dsir", StateTable.Buckets))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     turn(docs)("dedup_pairs").write.format("noop").mode("overwrite").save()
     val afterFirst = cells()
@@ -723,12 +717,12 @@ class StateCompactionSpec extends AnyFunSuite {
     val stOld = Files.createTempDirectory("graft_dsir_mig_old").toString
     graft.operators.TextAnalysis.persistDsirState(docs, "src0", stNew)
     // forge the pre-round-12 layout: (b, tc, sc, nb) only
-    spark.read.parquet(stNew + "/buckets").drop("ng", "bid")
-      .write.parquet(stOld + "/buckets")
+    spark.read.parquet(member(stNew, StateTable.Buckets)).drop("ng", "bid")
+      .write.parquet(member(stOld, StateTable.Buckets))
     // the param probe must not throw on the missing ng column: the
     // one-shot migration backfills ngram = 1 / bid = ""
     assert(graft.operators.TextAnalysis.dsirStateParams(spark, stOld) === ((64, 1)))
-    val migrated = spark.read.parquet(stOld + "/buckets")
+    val migrated = spark.read.parquet(member(stOld, StateTable.Buckets))
     assert(migrated.columns.toSet.contains("ng") && migrated.columns.toSet.contains("bid"))
     assert(migrated.filter(col("ng") =!= 1 || col("bid") =!= "").count() === 0L)
     // scoring through the migrated table equals scoring the reference
@@ -741,7 +735,7 @@ class StateCompactionSpec extends AnyFunSuite {
     // mixed-footer dir): the replay-checked append works against it
     graft.operators.TextAnalysis.persistDsirState(
       docs.limit(5), "src0", stOld, batchId = "post-migration")
-    assert(spark.read.parquet(stOld + "/buckets")
+    assert(spark.read.parquet(member(stOld, StateTable.Buckets))
       .filter(col("bid") === "persist:post-migration").count() > 0L)
   }
 
@@ -779,7 +773,7 @@ class StateCompactionSpec extends AnyFunSuite {
     // the ~25% edit wave is over the gate: compaction folds and clears
     assert(TA.compactEncodedCorpusIfNeeded(spark, st + "/enc",
       docs.limit(0).select("doc_id")))
-    assert(!new java.io.File(st + "/enc/tombstones").exists())
+    assert(!StateTable(spark, st + "/enc").hasTombstones)
     assert(view() === healed, "compaction must not change the view")
   }
 
@@ -806,14 +800,14 @@ class StateCompactionSpec extends AnyFunSuite {
       .select(col("doc_id"), col("fp"), col("ids").cast("string"), col("n_tokens"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(rows(st + "/enc") === rows(fresh + "/enc"))
-    assert(!new java.io.File(st + "/enc/tombstones").exists(),
+    assert(!StateTable(spark, st + "/enc").hasTombstones,
       "compact mode leaves no tombstones")
   }
 
   test("the encoded tier can be BORN by a compact-mode heal turn (no day-0 build)") {
     // round-17 hazard pair: a never-created table must read as empty
     // (loadEncodedCorpus) and compact as a no-op (compactEncodedCorpus
-    // would otherwise hand swapRewrite an absent dir to rename)
+    // would otherwise commit a rewrite of an absent table)
     val st = Files.createTempDirectory("graft_enc_born_compact").toString
     val TA = graft.operators.TextAnalysis
     val day1Docs = docs.filter(col("doc_id") % 5 =!= 0)
@@ -856,7 +850,7 @@ class StateCompactionSpec extends AnyFunSuite {
         st + "/mh", st + "/ivf", healEdits = true, healVia = "tombstone",
         dsirStatePath = Some(st + "/dsir"))("dedup_pairs")
         .write.format("noop").mode("overwrite").save()
-    def cells() = spark.read.parquet(st + "/dsir/buckets")
+    def cells() = spark.read.parquet(member(st + "/dsir", StateTable.Buckets))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     turn(corpusA, corpusB) // day 1: A -> B
     turn(corpusB, corpusA) // day 2: revert
@@ -962,7 +956,7 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(e.getMessage.contains("pair"))
     // the argument error fired before the heal touched the signature
     // tier: no tombstones, rows untouched
-    assert(!new java.io.File(st + "/mh/tombstones").exists())
+    assert(!StateTable(spark, st + "/mh").hasTombstones)
     assert(sigRows(st + "/mh") === before)
   }
 
@@ -997,7 +991,7 @@ class StateCompactionSpec extends AnyFunSuite {
     assert(deltaPairs === snapPairs, "delta and snapshot turns must emit the same pairs")
     assert(sigRows(deltaSt + "/mh") === sigRows(snapSt + "/mh"),
       "signature state must be identical across the two feed shapes")
-    def dsirSums(p: String) = spark.read.parquet(p + "/dsir/buckets")
+    def dsirSums(p: String) = spark.read.parquet(member(p + "/dsir", StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(dsirSums(deltaSt) === dsirSums(snapSt),
@@ -1032,7 +1026,7 @@ class StateCompactionSpec extends AnyFunSuite {
     graft.operators.Dedup.persistMinhashSignatures(day1Docs, 3, 16, 4, st + "/mh")
     Similarity.buildIvfIndex(embs, nlist = 16, path = st + "/ivf")
     TA.persistDsirState(day1Docs, "src0", st + "/dsir")
-    def cells() = spark.read.parquet(st + "/dsir/buckets")
+    def cells() = spark.read.parquet(member(st + "/dsir", StateTable.Buckets))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     Pipelines.dailyIncremental(spark, day1Docs, docs, embs, embs,
       st + "/mh", st + "/ivf", healEdits = true, healVia = "tombstone",
@@ -1047,17 +1041,5 @@ class StateCompactionSpec extends AnyFunSuite {
       .write.format("noop").mode("overwrite").save()
     assert(cells() === afterSnap,
       "the delta-shaped redelivery must derive the snapshot turn's stamp and skip")
-  }
-
-  test("compaction refuses to run over a previous crash's debris") {
-    val state = Files.createTempDirectory("graft_sig_debris").toString
-    Dedup.persistMinhashSignatures(docs.limit(50), 3, 16, 4, state)
-    // simulate a swap that died between the two renames
-    Files.createDirectory(java.nio.file.Paths.get(state + "/sigs_precompact"))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.compactSignatures(docs, 3, 16, 4, state,
-        docs.limit(0).select("doc_id"))
-    }
-    assert(e.getMessage.contains("_precompact"))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.{Sampling, Similarity, TextAnalysis}
+import graft.sources.StateTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamIngestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
+  private def member(root: String, m: String): String = StateTable(spark, root).path(m)
 
   private val sf = "/root/testdata/sf0.001"
   private def docs = Tables.load(spark, sf, "documents")
@@ -30,14 +32,14 @@ class StreamIngestSpec extends AnyFunSuite {
       st + "/dsir", st + "/ckpt")
     // sums, not rows: the tiers split the same counts across different
     // batch boundaries; only the per-bucket totals are the state
-    def sums(p: String) = spark.read.parquet(p + "/buckets")
+    def sums(p: String) = spark.read.parquet(member(p, StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(sums(st + "/dsir") === sums(ref))
-    val before = spark.read.parquet(st + "/dsir/buckets").count()
+    val before = spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count()
     streaming.DsirStream.incrementalCounts(spark, st + "/feed", "src0",
       st + "/dsir", st + "/ckpt2")
-    assert(spark.read.parquet(st + "/dsir/buckets").count() === before,
+    assert(spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count() === before,
       "a full replay must append no cells (bid stamps match)")
   }
 
@@ -58,15 +60,15 @@ class StreamIngestSpec extends AnyFunSuite {
       st + "/dsir", st + "/ckptA")
     streaming.DsirStream.incrementalCounts(spark, st + "/feedB", "src0",
       st + "/dsir", st + "/ckptB")
-    def sums(p: String) = spark.read.parquet(p + "/buckets")
+    def sums(p: String) = spark.read.parquet(member(p, StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     assert(sums(st + "/dsir") === sums(ref),
       "feed B's batches must append despite feed A having drained first")
-    val before = spark.read.parquet(st + "/dsir/buckets").count()
+    val before = spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count()
     streaming.DsirStream.incrementalCounts(spark, st + "/feedA", "src0",
       st + "/dsir", st + "/ckptA2")
-    assert(spark.read.parquet(st + "/dsir/buckets").count() === before,
+    assert(spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count() === before,
       "a re-drain of feed A through a fresh checkpoint is still a no-op")
   }
 
@@ -102,12 +104,12 @@ class StreamIngestSpec extends AnyFunSuite {
     // state the later batches have since grown, so its recomputed
     // pairs would differ — the content-addressed _SUCCESS skip keeps
     // the original emission.
-    val sigCount = spark.read.parquet(st + "/mh/sigs").count()
-    val ivfBefore = spark.read.parquet(st + "/ivf/assignments").count()
+    val sigCount = spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count()
+    val ivfBefore = spark.read.parquet(member(st + "/ivf", StateTable.Assignments)).count()
     streaming.TurnStream.dailyTurns(spark, st + "/docfeed", st + "/embfeed",
       st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt2")
-    assert(spark.read.parquet(st + "/mh/sigs").count() === sigCount)
-    assert(spark.read.parquet(st + "/ivf/assignments").count() === ivfBefore)
+    assert(spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count() === sigCount)
+    assert(spark.read.parquet(member(st + "/ivf", StateTable.Assignments)).count() === ivfBefore)
     val replayed = streaming.TurnStream.emittedPairs(spark, st + "/pairs")
       .collect().map(_.toSeq).toSeq
     assert(replayed === streamed, "replay must not duplicate or rewrite pairs")
@@ -149,12 +151,12 @@ class StreamIngestSpec extends AnyFunSuite {
     // since each batch's first delivery, which would flip a DERIVED
     // DSIR stamp (non-family context changed) — the content-digest
     // runId is delivery-independent, so every tier is a no-op
-    val dsirCells = spark.read.parquet(st + "/dsir/buckets").count()
-    val encCount = spark.read.parquet(st + "/enc/ids").count()
+    val dsirCells = spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count()
+    val encCount = spark.read.parquet(member(st + "/enc", StateTable.Ids)).count()
     drain("ckpt2")
-    assert(spark.read.parquet(st + "/dsir/buckets").count() === dsirCells,
+    assert(spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count() === dsirCells,
       "a late replay must not double-sum the DSIR state")
-    assert(spark.read.parquet(st + "/enc/ids").count() === encCount)
+    assert(spark.read.parquet(member(st + "/enc", StateTable.Ids)).count() === encCount)
   }
 
   test("multi-file grouping caveat: a regrouped re-drain double-sums; the default is exact") {
@@ -167,7 +169,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // (one file per trigger) re-drains as an exact no-op.
     val bucket = Sampling.hashBucket(col("doc_id").cast("string"))
     val st = Files.createTempDirectory("graft_ds_regroup").toString
-    def sums(p: String) = spark.read.parquet(p + "/buckets")
+    def sums(p: String) = spark.read.parquet(member(p, StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     // grouped drain (4 feed files, 2 per batch)
@@ -197,7 +199,7 @@ class StreamIngestSpec extends AnyFunSuite {
   test("migratePositionalBids: a pre-digest state regains re-drain idempotence") {
     val bucket = Sampling.hashBucket(col("doc_id").cast("string"))
     val st = Files.createTempDirectory("graft_ds_migrate").toString
-    def sums(p: String) = spark.read.parquet(p + "/buckets")
+    def sums(p: String) = spark.read.parquet(member(p, StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     TextAnalysis.persistDsirState(docs.filter(bucket < 80), "src0", st + "/dsir")
@@ -223,8 +225,8 @@ class StreamIngestSpec extends AnyFunSuite {
     fs.rename(new org.apache.hadoop.fs.Path(st + "/dsir"),
       new org.apache.hadoop.fs.Path(unmigrated))
     fs.mkdirs(new org.apache.hadoop.fs.Path(st + "/dsir"))
-    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(unmigrated + "/buckets"),
-      fs, new org.apache.hadoop.fs.Path(st + "/dsir/buckets"), false,
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(member(unmigrated, StateTable.Buckets)),
+      fs, new org.apache.hadoop.fs.Path(member(st + "/dsir", StateTable.Buckets)), false,
       spark.sparkContext.hadoopConfiguration)
     streaming.DsirStream.incrementalCounts(spark, st + "/feed", "src0",
       unmigrated, st + "/u_ckpt")
@@ -241,9 +243,9 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(sums(st + "/dsir") === sums(ref),
       "a migrated state must skip the re-drain exactly")
     // idempotent: a second migration pass touches nothing
-    val before = spark.read.parquet(st + "/dsir/buckets").collect().map(_.toSeq).toSet
+    val before = spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).collect().map(_.toSeq).toSet
     streaming.DsirStream.migratePositionalBids(spark, st + "/feed", st + "/dsir")
-    assert(spark.read.parquet(st + "/dsir/buckets").collect().map(_.toSeq).toSet === before)
+    assert(spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).collect().map(_.toSeq).toSet === before)
   }
 
   test("migratePositionalBids on a CRASHED old drain: the un-ingested suffix still lands") {
@@ -253,7 +255,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // whole feed ingested would silently skip the tail forever.
     val bucket = Sampling.hashBucket(col("doc_id").cast("string"))
     val st = Files.createTempDirectory("graft_ds_migrate_partial").toString
-    def sums(p: String) = spark.read.parquet(p + "/buckets")
+    def sums(p: String) = spark.read.parquet(member(p, StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     TextAnalysis.persistDsirState(docs.filter(bucket < 80), "src0", st + "/dsir")
@@ -316,7 +318,7 @@ class StreamIngestSpec extends AnyFunSuite {
       st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt")
     val pairs1 = streaming.TurnStream.emittedPairs(spark, st + "/pairs")
       .collect().map(_.toSeq).toSeq
-    val sigCount = spark.read.parquet(st + "/mh/sigs").count()
+    val sigCount = spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count()
     // tiers enabled between drains: day-0 builds over day-1 docs only —
     // the feed's content exists in NO tier state yet
     TextAnalysis.persistDsirState(day1Docs, "src0", st + "/dsir")
@@ -345,7 +347,7 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(streaming.TurnStream.emittedPairs(spark, st + "/pairs")
       .collect().map(_.toSeq).toSeq === pairs1,
       "the backfill must not rewrite or duplicate the pairs sink")
-    assert(spark.read.parquet(st + "/mh/sigs").count() === sigCount,
+    assert(spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count() === sigCount,
       "the backfill turns must not re-append signatures")
     // the per-tier skip reads the stored bid format — pin it: stream
     // turns' DSIR appends land as "persist:stream:<digest>:added"
@@ -357,11 +359,11 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(bids.exists(_.startsWith("persist:stream:")),
       s"stream-turn DSIR bids must carry the persist:stream: prefix the per-tier skip matches (got $bids)")
     // drain 3: everything ingested everywhere — full no-op
-    val dsirCells = spark.read.parquet(st + "/dsir/buckets").count()
-    val encCount = spark.read.parquet(st + "/enc/ids").count()
+    val dsirCells = spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count()
+    val encCount = spark.read.parquet(member(st + "/enc", StateTable.Ids)).count()
     drain("ckpt3")
-    assert(spark.read.parquet(st + "/dsir/buckets").count() === dsirCells)
-    assert(spark.read.parquet(st + "/enc/ids").count() === encCount)
+    assert(spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count() === dsirCells)
+    assert(spark.read.parquet(member(st + "/enc", StateTable.Ids)).count() === encCount)
   }
 
   test("encoded tier born EMPTY mid-feed: the backfill probe reads the missing table as empty and creates it") {
@@ -384,7 +386,7 @@ class StreamIngestSpec extends AnyFunSuite {
     TextAnalysis.persistBpeVocab(docs, merges = 3, st + "/bpe")
     val fs = new org.apache.hadoop.fs.Path(st).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(st + "/enc/ids")),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(member(st + "/enc", StateTable.Ids))),
       "precondition: the encoded table must not exist yet")
     // drain 2 (fresh checkpoint): marked batches hit the needEnc probe
     // against the absent table — must read as empty, then backfill
@@ -399,11 +401,11 @@ class StreamIngestSpec extends AnyFunSuite {
         .select(col("doc_id"), col("ids"))),
       "the backfill must create the table and encode exactly the fed docs")
     // drain 3: ingested everywhere — a no-op, and the view stays stable
-    val encCount = spark.read.parquet(st + "/enc/ids").count()
+    val encCount = spark.read.parquet(member(st + "/enc", StateTable.Ids)).count()
     streaming.TurnStream.dailyTurns(spark, st + "/docfeed", st + "/embfeed",
       st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt3",
       bpeVocabPath = Some(st + "/bpe"), encodedPath = Some(st + "/enc"))
-    assert(spark.read.parquet(st + "/enc/ids").count() === encCount)
+    assert(spark.read.parquet(member(st + "/enc", StateTable.Ids)).count() === encCount)
   }
 
   test("compactPairs: batch dirs fold into one base; replay-skip markers survive; emissions unchanged") {
@@ -433,9 +435,9 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(pairs() === before, "compaction must not change the emissions")
     // replay through a FRESH checkpoint: the manifest IS the marker now
     // — no turn re-runs, no batch dirs reappear, state untouched
-    val sigCount = spark.read.parquet(st + "/mh/sigs").count()
+    val sigCount = spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count()
     drain("ckpt2")
-    assert(spark.read.parquet(st + "/mh/sigs").count() === sigCount,
+    assert(spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count() === sigCount,
       "replayed batches must skip via the manifest digests")
     assert(!entries.exists(_.startsWith("batch_")),
       "a replayed batch must not rewrite its folded pairs directory")
@@ -566,7 +568,7 @@ class StreamIngestSpec extends AnyFunSuite {
     // fires on the stale snapshot — only the append's own fresh-state
     // guard stands between it and a double-sum
     drain("ckpt2")
-    def sums(p: String) = spark.read.parquet(p + "/buckets")
+    def sums(p: String) = spark.read.parquet(member(p, StateTable.Buckets))
       .groupBy(col("b")).agg(sum(col("tc")).as("tc"), sum(col("sc")).as("sc"))
       .collect().toSet[org.apache.spark.sql.Row].map(_.toSeq)
     val ref = Files.createTempDirectory("graft_turndup_ref").toString + "/dsir"
