@@ -39,27 +39,31 @@ object Pipelines {
     * commit lands exactly the missing rows. No high-water mark: a late
     * page whose plays predate the newest stored play still lands.
     * `tracks_processed` counts the feed's rows, `rows_appended` the
-    * rows this run wrote.
+    * rows this run wrote. The summary is aggregated in the validation
+    * job and rendered there by Spark's JSON writer, so the XCom line
+    * costs no job of its own.
     */
   def recentlyPlayedEtl(
       spark: SparkSession,
       payloads: Dataset[String],
       tablePath: String,
       asOf: java.sql.Date): String = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{count, lit, struct, to_json}
     val flat = SpotifyFlatten.recentlyPlayed(
       SpotifySchemas.parse(payloads, SpotifySchemas.recentlyPlayedPayload))
     flat.cache()
     try {
-      val report = Validation.check(flat, asOf) // raises on duplicate PK
+      // raises on duplicate PK
+      val report = Validation.check(flat, asOf,
+        Seq(to_json(struct(RunSummaries.recentlyPlayedSummaryCols: _*)), count(lit(1))))
       if (!report.valid) return """{"tracks_processed":0,"status":"no_data"}"""
       val unseen = storedPlays(spark, flat, tablePath)
         .map(seen => flat.join(seen, Seq("played_at"), "left_anti").cache())
       try {
         val appended = unseen.map(_.count())
         if (appended.forall(_ > 0)) Sinks.appendPartitioned(unseen.getOrElse(flat), tablePath)
-        Sinks.xcomJson(RunSummaries.recentlyPlayedSummary(flat).withColumn("rows_appended",
-          appended.fold(col("tracks_processed"))(lit(_))))
+        val rowsAppended = appended.getOrElse(report.extra.getLong(1))
+        report.extra.getString(0).stripSuffix("}") + s""","rows_appended":$rowsAppended}"""
       } finally unseen.foreach(_.unpersist())
     } finally flat.unpersist()
   }

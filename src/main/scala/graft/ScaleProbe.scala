@@ -984,17 +984,17 @@ object ScaleProbe {
         println(f"""{"op":"$name","sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$n}""")
       }
       drainTimed("stream_session_close") {
-        streaming.EventStream.withStatePartitions(spark, 8) {
-          streaming.SessionStream.drainClosed(
-            spark, streaming.EventStream.source(spark, s"$dir/feed"), 30)
+        val src = streaming.EventStream.source(spark, s"$dir/feed")
+        streaming.EventStream.withStatePartitions(spark, streaming.EventStream.stateStores(src)) {
+          streaming.SessionStream.drainClosed(spark, src, 30)
         }.filter($"user_id" =!= -1L)
       }
       drainTimed("stream_session_window_agg") {
-        streaming.EventStream.withStatePartitions(spark, 8) {
+        val agg = streaming.EventStream.sessionAgg(
+          streaming.EventStream.source(spark, s"$dir/feed"), gapMinutes = 30)
+        streaming.EventStream.withStatePartitions(spark, streaming.EventStream.stateStores(agg)) {
           streaming.EventStream.withStateStore(spark, streaming.EventStream.RocksDbProvider) {
-            streaming.EventStream.runToCompletion(spark,
-              streaming.EventStream.sessionAgg(
-                streaming.EventStream.source(spark, s"$dir/feed"), gapMinutes = 30))
+            streaming.EventStream.runToCompletion(spark, agg)
           }
         }.filter($"user_id" =!= -1L)
       }
@@ -1008,9 +1008,9 @@ object ScaleProbe {
       val dir = Scratch.dir("graft_cms_probe")
       events.select($"ts", $"user_id").write.parquet(s"$dir/feed")
       val t0 = System.nanoTime()
-      val n = streaming.EventStream.withStatePartitions(spark, 8) {
-        streaming.CmsStream.drainedCells(spark,
-          streaming.EventStream.source(spark, s"$dir/feed"), "user_id", 4, 512)
+      val src = streaming.EventStream.source(spark, s"$dir/feed")
+      val n = streaming.EventStream.withStatePartitions(spark, streaming.EventStream.stateStores(src)) {
+        streaming.CmsStream.drainedCells(spark, src, "user_id", 4, 512)
       }.count()
       println(f"""{"op":"stream_cms_cells","sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$n}""")
     }

@@ -284,7 +284,8 @@ object SparkEntry {
       import s.implicits._
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val agg = EventStream.dailyAgg(EventStream.source(s, s"$dir/events.parquet"))
-      EventStream.withStatePartitions(s, 8)(EventStream.runToCompletion(s, agg))
+      EventStream.withStatePartitions(s, EventStream.stateStores(agg))(
+        EventStream.runToCompletion(s, agg))
         .select($"w.start".as("day"), $"event_type", $"n_events", $"total_value")
         .orderBy($"day", $"event_type")
     }),
@@ -457,14 +458,15 @@ object SparkEntry {
     "q68_stream_interval_join" -> ((s, dir) => {
       import s.implicits._
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 4 state partitions, not the session's 32: the interval join
-      // keeps 4 state stores per partition and per-batch commit cost is
-      // store-count-linear — see EventStream.withStatePartitions
-      EventStream.withStatePartitions(s, 4)(
-        EventStream.runAppendToMemory(s, EventStream.intervalJoined(
-          EventStream.source(s, s"$dir/events.parquet"),
-          EventStream.source(s, s"$dir/events.parquet"),
-          windowMinutes = 60)))
+      // the interval join keeps 4 state stores per partition and
+      // per-batch commit cost is store-count-linear, so the partition
+      // count follows the backlog — see EventStream.stateStores
+      val joined = EventStream.intervalJoined(
+        EventStream.source(s, s"$dir/events.parquet"),
+        EventStream.source(s, s"$dir/events.parquet"),
+        windowMinutes = 60)
+      EventStream.withStatePartitions(s, EventStream.stateStores(joined))(
+        EventStream.runAppendToMemory(s, joined))
         .orderBy($"c_id", $"p_id")
     }),
 
@@ -1108,7 +1110,8 @@ object SparkEntry {
         .dropDuplicates("event_id")
         .groupBy(window($"ts", "1 day").as("w"))
         .agg(count(lit(1)).as("n_events"))
-      EventStream.withStatePartitions(s, 8)(EventStream.runToCompletion(s, agg))
+      EventStream.withStatePartitions(s, EventStream.stateStores(agg))(
+        EventStream.runToCompletion(s, agg))
         .select($"w.start".as("day"), $"n_events")
         .orderBy($"day")
     }),
@@ -1143,7 +1146,7 @@ object SparkEntry {
       // overlap shape, deterministic instead of wall-clock-dependent
       for (d <- 0 until 8)
         capped.filter($"ts" >= lit(plusDays(d - 1)) && $"ts" < lit(plusDays(d + 1)))
-          .repartition(1).write.mode(if (d == 0) "overwrite" else "append")
+          .coalesce(1).write.mode(if (d == 0) "overwrite" else "append")
           .parquet(feed)
       val src = s.readStream.schema(s.read.parquet(feed).schema)
         .option("maxFilesPerTrigger", 1).parquet(feed)
@@ -1152,7 +1155,8 @@ object SparkEntry {
         .dropDuplicates("event_id")
         .groupBy(window($"ts", "1 day").as("w"))
         .agg(count(lit(1)).as("n_events"))
-      EventStream.withStatePartitions(s, 8)(EventStream.runToCompletion(s, agg))
+      EventStream.withStatePartitions(s, EventStream.stateStores(agg))(
+        EventStream.runToCompletion(s, agg))
         .select($"w.start".as("day"), $"n_events")
         .orderBy($"day")
     }),
@@ -1165,7 +1169,8 @@ object SparkEntry {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val agg = EventStream.sessionAgg(
         EventStream.source(s, s"$dir/events.parquet"), gapMinutes = 30)
-      EventStream.withStatePartitions(s, 8)(EventStream.runToCompletion(s, agg))
+      EventStream.withStatePartitions(s, EventStream.stateStores(agg))(
+        EventStream.runToCompletion(s, agg))
         .select($"user_id", $"sw.start".as("session_start"),
           $"sw.end".as("session_end"), $"n_events")
         .orderBy($"user_id", $"session_start")
@@ -1662,7 +1667,7 @@ object SparkEntry {
     "q143_stream_rolling_wau" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
       val src = EventStream.source(s, s"$dir/events.parquet")
-      EventStream.withStatePartitions(s, 8) {
+      EventStream.withStatePartitions(s, EventStream.stateStores(src)) {
         Retention.mergeRollingKmv(
           streaming.KmvStream.drainedPartials(s, src, k = 64),
           windowDays = 7, k = 64)
@@ -1699,9 +1704,9 @@ object SparkEntry {
         .select(col("user_id"), col("ts")).filter(col("user_id").isNotNull)
       val staging = Scratch.dir("graft_sess_q146")
       streaming.SessionStream.stageWithSentinel(ev, s"$staging/feed", gapMinutes = 30)
-      EventStream.withStatePartitions(s, 8) {
-        streaming.SessionStream.drainClosed(
-          s, EventStream.source(s, s"$staging/feed"), gapMinutes = 30)
+      val src = EventStream.source(s, s"$staging/feed")
+      EventStream.withStatePartitions(s, EventStream.stateStores(src)) {
+        streaming.SessionStream.drainClosed(s, src, gapMinutes = 30)
       }.filter(col("user_id") =!= streaming.SessionStream.SentinelUser)
         .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
         .orderBy(col("user_id"), col("session_start"))
@@ -1715,7 +1720,7 @@ object SparkEntry {
     // equal the batch partial exactly ----
     "q147_stream_heavy_hitters" -> ((s, dir) => {
       val src = EventStream.source(s, s"$dir/events.parquet")
-      val cells = EventStream.withStatePartitions(s, 8) {
+      val cells = EventStream.withStatePartitions(s, EventStream.stateStores(src)) {
         streaming.CmsStream.drainedCells(s, src, keyCol = "user_id", depth = 4, width = 512)
       }
       FreqSketch.heavyHittersFromCells(Tables.load(s, dir, "events"),

@@ -52,42 +52,44 @@ object Tables {
     */
   def firstParquetFile(spark: SparkSession, path: String)
       : Option[org.apache.hadoop.fs.Path] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(root) && fs.getFileStatus(root).isFile) Some(root)
+    else dataFiles(spark, path).map(_.getPath).find(_.getName.endsWith(".parquet"))
+  }
+
+  /** The files under `path` that a Spark read would see (the path itself
+    * when it is a file), by recursive driver-side listing; empty when
+    * the path is missing. The hidden-prefix check applies to EVERY path
+    * segment below the root, not just the leaf: a crashed write's
+    * _temporary/.../part-*.parquet is possibly truncated, and Spark's
+    * own file index prunes hidden directories at every level. The walk
+    * stops at the root by Path equality on the QUALIFIED root:
+    * listFiles returns fully-qualified paths, so comparing against a
+    * relative caller argument would never terminate at the root and a
+    * hidden-prefixed ANCESTOR of the data dir (e.g. data under
+    * .../.cache/...) would mark every file hidden.
+    */
+  def dataFiles(spark: SparkSession, path: String): Iterator[org.apache.hadoop.fs.FileStatus] = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return None
-    if (fs.getFileStatus(root).isFile) Some(root)
-    else {
-      val it = fs.listFiles(root, true)
-      // hidden-prefix check applies to EVERY path segment below the
-      // root, not just the leaf: a crashed write's _temporary/.../
-      // part-*.parquet is possibly truncated, and Spark's own file
-      // index prunes hidden directories at every level — sniffing a
-      // footer Spark itself would never read must not fail the load.
-      // The walk stops at the root by Path equality on the QUALIFIED
-      // root: listFiles returns fully-qualified paths, so comparing
-      // against a relative caller argument would never terminate at
-      // the root and a hidden-prefixed ANCESTOR of the data dir
-      // (e.g. data under .../.cache/...) would mark every file hidden
-      val qualifiedRoot = fs.makeQualified(root)
-      def hidden(p: Path): Boolean = {
-        var cur = p
-        while (cur != null && cur != qualifiedRoot) {
-          val n = cur.getName
-          if (n.startsWith("_") || n.startsWith(".")) return true
-          cur = cur.getParent
-        }
-        false
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return Iterator.empty
+    val rootStatus = fs.getFileStatus(root)
+    if (rootStatus.isFile) return Iterator.single(rootStatus)
+    val qualifiedRoot = fs.makeQualified(root)
+    def hidden(p: Path): Boolean = {
+      var cur = p
+      while (cur != null && cur != qualifiedRoot) {
+        val n = cur.getName
+        if (n.startsWith("_") || n.startsWith(".")) return true
+        cur = cur.getParent
       }
-      var found: Option[Path] = None
-      while (found.isEmpty && it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet") && !hidden(st.getPath))
-          found = Some(st.getPath)
-      }
-      found
+      false
     }
+    val it = fs.listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(st => st.isFile && !hidden(st.getPath))
   }
 
   /** The `ts` column's logical-type annotation from the first footer

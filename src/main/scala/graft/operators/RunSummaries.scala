@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The per-run XCom summary records of the three reference pipelines
@@ -23,10 +23,14 @@ object RunSummaries {
     * "min to max" date-range string over the sliced `timestamp` column.
     */
   def recentlyPlayedSummary(flat: DataFrame): DataFrame =
-    flat.agg(
-      count(lit(1)).as("tracks_processed"),
-      countDistinct(col("artist_name")).as("unique_artists"),
-      concat_ws(" to ", min(col("timestamp")), max(col("timestamp"))).as("date_range"))
+    flat.agg(recentlyPlayedSummaryCols.head, recentlyPlayedSummaryCols.tail: _*)
+
+  /** [[recentlyPlayedSummary]]'s aggregates, for a job that computes
+    * them next to its own. */
+  val recentlyPlayedSummaryCols: Seq[Column] = Seq(
+    count(lit(1)).as("tracks_processed"),
+    countDistinct(col("artist_name")).as("unique_artists"),
+    concat_ws(" to ", min(col("timestamp")), max(col("timestamp"))).as("date_range"))
 
   /** EP3 (new.py:250-263): count, distinct artists, half-even-rounded
     * mean popularity, explicit count.

@@ -71,10 +71,11 @@ object SpotifyFlatten {
     * 1-based position in API response order, which is recency-descending,
     * so we anchor it on `played_at` desc (SURVEY.md W1: never trust
     * incoming row order) with track_id as deterministic tie-break.
-    * The UNPARTITIONED window is deliberate, not an oversight: the
-    * rank is global BY SPEC and the input is one API page (≤ 50 rows —
-    * the endpoint's hard cap, SURVEY.md §6); a feed large enough to
-    * matter would partition by user/day the way q4 does.
+    * The window is UNPARTITIONED because the rank is global by spec,
+    * so every row goes through one task. The input is not bounded to
+    * one API page (≤ 50 rows): `graft.Jobs ep3` ranks a whole day feed
+    * of many pages. Replacing this with a distributed global rank is
+    * ROADMAP item 4.
     */
   def rankedRecentlyPlayed(payload: DataFrame): DataFrame = {
     val w = Window.orderBy(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The reference's data-quality contract (`check_if_valid_data`,
@@ -17,14 +17,18 @@ import org.apache.spark.sql.functions._
   * (one scan, map-side partial aggregation) — at 100 TB the difference
   * between one scan and four is the whole game. Emptiness uses
   * `df.isEmpty` (reads at most one partition), not `count() == 0`.
+  * A caller's own aggregates (a run summary) ride the same job.
   */
 object Validation {
 
+  /** `extra` holds the caller's extra aggregates, in order (empty when
+    * the frame is). */
   final case class Report(
       empty: Boolean,
       duplicatePlayedAt: Long,
       nullValues: Long,
-      staleRows: Long) {
+      staleRows: Long,
+      extra: Row = Row.empty) {
     def valid: Boolean = !empty
   }
 
@@ -32,9 +36,11 @@ object Validation {
 
   /** Validate `df` against the contract; `asOf` pins "now" for the
     * 7-day staleness window so tests and backfills are deterministic
-    * (the reference uses wall-clock `datetime.now()`).
+    * (the reference uses wall-clock `datetime.now()`). `extra`
+    * aggregates are computed in the validation job and returned in
+    * [[Report.extra]].
     */
-  def check(df: DataFrame, asOf: java.sql.Date): Report = {
+  def check(df: DataFrame, asOf: java.sql.Date, extra: Seq[Column] = Nil): Report = {
     if (df.isEmpty) return Report(empty = true, 0L, 0L, 0L)
 
     val cols = df.columns
@@ -60,14 +66,15 @@ object Validation {
       // not stale
       (if (hasTimestamp)
          sum(when(try_to_date(col("timestamp")) < date_sub(lit(asOf), 7), 1L).otherwise(0L))
-       else lit(0L)).as("stale"))
+       else lit(0L)).as("stale")) ++ extra
 
     val r = df.agg(aggs.head, aggs.tail: _*).head()
     val report = Report(
       empty = false,
       duplicatePlayedAt = r.getAs[Long]("dups"),
       nullValues = Option(r.getAs[Any]("nulls")).fold(0L)(_.asInstanceOf[Long]),
-      staleRows = Option(r.getAs[Any]("stale")).fold(0L)(_.asInstanceOf[Long]))
+      staleRows = Option(r.getAs[Any]("stale")).fold(0L)(_.asInstanceOf[Long]),
+      extra = Row.fromSeq(r.toSeq.drop(3)))
 
     if (report.duplicatePlayedAt > 0)
       throw new PrimaryKeyViolation(

@@ -89,6 +89,36 @@ class PipelinesSpec extends AnyFunSuite {
     assert(back.count() === 150L && back.select("played_at").distinct().count() === 150L)
   }
 
+  test("EP2 on a fresh sink runs three job-launching SQL executions; the XCom line is unchanged") {
+    val feed = plays("2024-01-10T22:00:00Z", 150).toDS()
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = j.properties
+        executions.add(Option(p.getProperty("spark.sql.execution.root.id"))
+          .getOrElse(p.getProperty("spark.sql.execution.id")))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val json = try {
+      val out = Pipelines.recentlyPlayedEtl(spark, feed, s"$tmp/tbl", java.sql.Date.valueOf("2024-01-12"))
+      org.apache.spark.TestListenerBus.drain(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    // isEmpty, the validation aggregate (which carries the summary), the append
+    assert(executions.size === 3, s"SQL executions: $executions")
+    // the line the separate summary action used to render, byte for byte
+    val flat = graft.operators.SpotifyFlatten.recentlyPlayed(
+      graft.sources.SpotifySchemas.parse(feed, graft.sources.SpotifySchemas.recentlyPlayedPayload))
+    val before = graft.sources.Sinks.xcomJson(graft.operators.RunSummaries.recentlyPlayedSummary(flat)
+      .withColumn("rows_appended", org.apache.spark.sql.functions.col("tracks_processed")))
+    assert(json === before)
+    assert(json.startsWith("""{"tracks_processed":150,"unique_artists":7,"date_range":"2024-01-10 to 2024-01-11""""))
+  }
+
   test("EP2 end-to-end: duplicate PK raises BEFORE anything is written") {
     val dir = tmp
     intercept[Validation.PrimaryKeyViolation] {

@@ -2,8 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import graft.streaming.{EventStream, IncrementalBatch}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming tier (SURVEY.md §2.10): the streamed plan must agree with
@@ -77,6 +82,87 @@ class StreamingSpec extends AnyFunSuite {
       }
       assert(n === Tables.load(spark, sf, "events").count())
     } finally sys.props -= "graft.stateStore"
+  }
+
+  /** q191's shape over `n` overlapping daily pulls of the sf0.001
+    * events: pull d covers days [d-1, d+1), one file each, drained one
+    * file per micro-batch through watermarked dedup and a daily count. */
+  private def repullDrain(n: Int): DataFrame = {
+    val feed = tmp("graft-repull") + "/feed"
+    val ev = Tables.load(spark, sf, "events").select($"event_id", $"event_type", $"ts", $"value")
+    val t0 = ev.agg(min($"ts")).head().getTimestamp(0).getTime
+    def day(d: Int) = lit(new java.sql.Timestamp(t0 + d * 86400000L))
+    for (d <- 0 until n)
+      ev.filter($"ts" >= day(d - 1) && $"ts" < day(d + 1))
+        .coalesce(1).write.mode("append").parquet(feed)
+    spark.readStream.schema(spark.read.parquet(feed).schema)
+      .option("maxFilesPerTrigger", 1).parquet(feed)
+      .withWatermark("ts", "7 days")
+      .dropDuplicates("event_id")
+      .groupBy(window($"ts", "1 day").as("w"))
+      .agg(count(lit(1)).as("n_events"))
+  }
+
+  test("stateStores sizes a file-sourced stream to its backlog, capped at the session's count") {
+    val dir = tmp("graft-state-stores") + "/data"
+    Tables.load(spark, sf, "events").repartition(3).write.parquet(dir)
+    val stream = EventStream.dedupped(EventStream.source(spark, dir))
+    val bytes = Tables.dataFiles(spark, dir).map(_.getLen).sum
+    assert(bytes > 1000L)
+    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(session >= 3)
+    assert(EventStream.stateStores(stream) === 1, "a small backlog takes one store")
+    // the count grows with the backlog's bytes: ceil(bytes / target)
+    assert(EventStream.stateStores(stream, bytes) === 1)
+    assert(EventStream.stateStores(stream, (bytes + 1) / 2) === 2)
+    assert(EventStream.stateStores(stream, (bytes + 2) / 3) === 3)
+    // a stream that reads the files twice has twice the backlog
+    val twice = EventStream.source(spark, dir).union(EventStream.source(spark, dir))
+    assert(EventStream.stateStores(twice, bytes) === 2)
+    // capped at the session's shuffle partitions
+    assert(EventStream.stateStores(stream, 1L) === session)
+    EventStream.withStatePartitions(spark, 2) {
+      assert(EventStream.stateStores(stream, 1L) === 2)
+    }
+    // an empty drop directory has no backlog
+    assert(EventStream.stateStores(EventStream.source(spark, tmp("graft-state-empty"))) === 1)
+    // a non-file source has no backlog to measure: the session's count
+    val rate = spark.readStream.format("rate").load()
+    assert(EventStream.stateStores(rate, 1L) === session)
+    assert(EventStream.stateStores(rate) === session)
+  }
+
+  test("a complete-mode drain runs no trailing zero-row batch and restores noDataMicroBatches") {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = spark.conf.getOption(key)
+    val inputRows = mutable.ArrayBuffer.empty[Long]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        inputRows.synchronized { inputRows += e.progress.numInputRows; () }
+    }
+    spark.streams.addListener(listener)
+    val n = try {
+      val out = EventStream.runToCompletion(spark, repullDrain(3))
+      TestListenerBus.drain(spark.sparkContext)
+      out.count()
+    } finally spark.streams.removeListener(listener)
+    assert(n > 0)
+    // one progress event per pull file, none for a trailing batch
+    assert(inputRows.synchronized(inputRows.toList).map(_ > 0) === List(true, true, true))
+    assert(spark.conf.getOption(key) === before)
+  }
+
+  test("a q191-shaped drain gives the same rows at the derived store count as at a pinned 8") {
+    val agg = repullDrain(4)
+    assert(EventStream.stateStores(agg) === 1)
+    def drain(stores: Int) = EventStream.withStatePartitions(spark, stores)(
+      EventStream.runToCompletion(spark, agg))
+      .select($"w.start".as("day"), $"n_events").orderBy($"day").collect().toSeq
+    val derived = drain(EventStream.stateStores(agg))
+    assert(derived.nonEmpty)
+    assert(derived === drain(8))
   }
 
   test("stream-stream interval join equals the batch interval join on the same files") {
