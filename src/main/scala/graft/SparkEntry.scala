@@ -460,7 +460,8 @@ object SparkEntry {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the interval join keeps 4 state stores per partition and
       // per-batch commit cost is store-count-linear, so the partition
-      // count follows the backlog — see EventStream.stateStores
+      // count follows the bytes a micro-batch reads — see
+      // EventStream.stateStores
       val joined = EventStream.intervalJoined(
         EventStream.source(s, s"$dir/events.parquet"),
         EventStream.source(s, s"$dir/events.parquet"),

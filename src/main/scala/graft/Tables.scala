@@ -53,9 +53,9 @@ object Tables {
   def firstParquetFile(spark: SparkSession, path: String)
       : Option[org.apache.hadoop.fs.Path] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root) && fs.getFileStatus(root).isFile) Some(root)
-    else dataFiles(spark, path).map(_.getPath).find(_.getName.endsWith(".parquet"))
+    val qualifiedRoot = root.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(root)
+    dataFiles(spark, path).map(_.getPath)
+      .find(p => p == qualifiedRoot || p.getName.endsWith(".parquet"))
   }
 
   /** The files under `path` that a Spark read would see (the path itself

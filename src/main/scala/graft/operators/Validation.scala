@@ -74,7 +74,7 @@ object Validation {
       duplicatePlayedAt = r.getAs[Long]("dups"),
       nullValues = Option(r.getAs[Any]("nulls")).fold(0L)(_.asInstanceOf[Long]),
       staleRows = Option(r.getAs[Any]("stale")).fold(0L)(_.asInstanceOf[Long]),
-      extra = Row.fromSeq(r.toSeq.drop(3)))
+      extra = Row.fromSeq(r.toSeq.takeRight(extra.size)))
 
     if (report.duplicatePlayedAt > 0)
       throw new PrimaryKeyViolation(

@@ -160,6 +160,15 @@ class SpotifyPipelineSpec extends AnyFunSuite {
     assert(rep.duplicatePlayedAt == 0)
   }
 
+  test("validation: extra aggregates come back as exactly the caller's, in order") {
+    import org.apache.spark.sql.functions.{count, lit, max}
+    val df = SpotifyFlatten.recentlyPlayed(recently(s"""{"items":[$fullItem,$sparseItem]}"""))
+    val rep = Validation.check(df, java.sql.Date.valueOf("2024-01-30"),
+      Seq(max($"timestamp"), count(lit(1))))
+    assert(rep.extra.toSeq == Seq("2024-01-10", 2L))
+    assert(Validation.check(df, java.sql.Date.valueOf("2024-01-30")).extra.size == 0)
+  }
+
   test("summaries: EP2 count/nunique/date_range (spotify_etl2.py:271-278)") {
     val df = SpotifyFlatten.recentlyPlayed(recently(s"""{"items":[$fullItem,$sparseItem]}"""))
     val r = RunSummaries.recentlyPlayedSummary(df).head()

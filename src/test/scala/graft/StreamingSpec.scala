@@ -103,24 +103,31 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n_events"))
   }
 
-  test("stateStores sizes a file-sourced stream to its backlog, capped at the session's count") {
+  test("stateStores sizes a file-sourced stream to its bytes per batch, capped at the task slots") {
     val dir = tmp("graft-state-stores") + "/data"
     Tables.load(spark, sf, "events").repartition(3).write.parquet(dir)
     val stream = EventStream.dedupped(EventStream.source(spark, dir))
     val bytes = Tables.dataFiles(spark, dir).map(_.getLen).sum
     assert(bytes > 1000L)
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(session >= 3)
+    val cap = math.min(session, spark.sparkContext.defaultParallelism)
+    assert(cap >= 3)
     assert(EventStream.stateStores(stream) === 1, "a small backlog takes one store")
-    // the count grows with the backlog's bytes: ceil(bytes / target)
+    // the count grows with the bytes a batch reads: ceil(bytes / target)
     assert(EventStream.stateStores(stream, bytes) === 1)
     assert(EventStream.stateStores(stream, (bytes + 1) / 2) === 2)
     assert(EventStream.stateStores(stream, (bytes + 2) / 3) === 3)
-    // a stream that reads the files twice has twice the backlog
+    // a stream that reads the files twice reads twice the bytes a batch
     val twice = EventStream.source(spark, dir).union(EventStream.source(spark, dir))
     assert(EventStream.stateStores(twice, bytes) === 2)
-    // capped at the session's shuffle partitions
-    assert(EventStream.stateStores(stream, 1L) === session)
+    // maxFilesPerTrigger spreads the 3 files over batches
+    def perTrigger(m: Int) = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", m).parquet(dir)
+    assert(EventStream.stateStores(perTrigger(3), (bytes + 1) / 2) === 2)
+    assert(EventStream.stateStores(perTrigger(1), (bytes + 1) / 2) === 1)
+    assert(EventStream.stateStores(perTrigger(1), (bytes / 3 + 1) / 2) === 2)
+    // capped at the task slots and the session's shuffle partitions
+    assert(EventStream.stateStores(stream, 1L) === cap)
     EventStream.withStatePartitions(spark, 2) {
       assert(EventStream.stateStores(stream, 1L) === 2)
     }

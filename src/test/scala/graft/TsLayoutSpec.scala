@@ -95,6 +95,17 @@ class TsLayoutSpec extends AnyFunSuite {
     assert(!Tables.tsIsNanosAnnotated(spark, "/nonexistent/graft-ts-path"))
   }
 
+  test("footer probe returns a file root itself, whatever its name") {
+    val dir = Files.createTempDirectory("graft-file-root").toString
+    Seq((1L, "x")).toDF("id", "v").coalesce(1).write.parquet(s"$dir/t")
+    val part = new java.io.File(s"$dir/t").listFiles().find(_.getName.endsWith(".parquet")).get
+    val bare = new java.io.File(s"$dir/data.bin")
+    assert(part.renameTo(bare))
+    assert(Tables.firstParquetFile(spark, bare.getPath).map(_.getName) == Some("data.bin"))
+    assert(Tables.firstParquetFile(spark, s"$dir/t").isEmpty)
+    assert(Tables.firstParquetFile(spark, s"$dir/missing").isEmpty)
+  }
+
   test("footer probe finds data under a hidden-prefixed ANCESTOR and a relative root") {
     // the hidden-segment walk must stop AT the given root: data living
     // under e.g. ~/.cache/... is legitimate, and a RELATIVE root
