@@ -226,9 +226,15 @@ object Bench {
     }
   }
 
+  /** The `local[n]` core count of the driver mains (Bench, BenchOne,
+    * ScaleProbe, Verify): `SPARK_GRAFT_CPUS`, else the machine's
+    * cores — more would size shuffles and state stores for task slots
+    * that do not exist. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Dev harness: time individual catalog queries with repetitions.
   *
   * Usage: runMain graft.BenchOne <reps> <queryName> [<queryName> ...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: the
+  * machine's cores, [[Bench.cpus]]).
   *
   * Prints one line per (query, rep) plus a min/median summary — the
   * adjudication tool for bench-noise disputes (run on a quiet machine,
@@ -17,7 +18,7 @@ object BenchOne {
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "usage: BenchOne <reps> <queryName>...")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
     // e.g. SPARK_GRAFT_SYSPROPS="graft.materialize=persist" to A/B a mode flag
     sys.env.get("SPARK_GRAFT_SYSPROPS").foreach(_.split(",").foreach { kv =>
       kv.split("=", 2) match {

@@ -319,8 +319,7 @@ object Pipelines {
                        bpeVocabPath: Option[String] = None,
                        encodedPath: Option[String] = None,
                        bpeArtifact: Option[graft.operators.TextAnalysis.BpeVocabArtifact] = None,
-                       compactionDocs: Option[org.apache.spark.sql.DataFrame] = None,
-                       dsirKnownState: Option[(Int, Int, Set[String])] = None): Map[String, org.apache.spark.sql.DataFrame] = {
+                       compactionDocs: Option[org.apache.spark.sql.DataFrame] = None): Map[String, org.apache.spark.sql.DataFrame] = {
     require(healVia == "compact" || healVia == "tombstone",
       s"healVia must be 'compact' or 'tombstone' (got '$healVia')")
     // argument-shape errors must fire BEFORE any state mutation: this
@@ -512,15 +511,9 @@ object Pipelines {
     // pre-turn bid snapshot the three appends answer their replay
     // checks from — replacing ~5 separate small reads of the same
     // buckets-rows-per-batch table (measured ~1.5s of driver-
-    // coordinated job overhead per turn at sf0.1). A repeated-turn
-    // caller that maintains the summary ITSELF (the streaming drain:
-    // one pre-drain read, driver-side bid accumulation per turn —
-    // sound because it is the single writer and every append's bid is
-    // a deterministic function of the turn) passes it via
-    // `dsirKnownState` and the per-turn state read disappears.
+    // coordinated job overhead per turn at sf0.1).
     val dsirSummary: Option[(Int, Int, Set[String])] =
-      dsirKnownState.orElse(
-        dsirStatePath.map(dp => graft.operators.TextAnalysis.dsirStateSummary(spark, dp)))
+      dsirStatePath.map(dp => graft.operators.TextAnalysis.dsirStateSummary(spark, dp))
     lazy val rid: String = runId.getOrElse(dsirSummary match {
       case Some((_, _, bids)) =>
         val famMark = s":auto:$contentHash:"
@@ -592,9 +585,16 @@ object Pipelines {
     // the unordered core: the ordered catalog frame is derived lazily
     // at the return (sorting only executes if THAT frame is consumed);
     // sinks write `dedup_pairs_raw` and skip the per-batch range sort
+    // an embedding-only turn (the stream drain's emb turns) carries a
+    // provably-empty doc delta: it emits no pairs and appends nothing,
+    // so skip the signature state load its dedup would pay for it
     label("signature tier: pin + append")
-    var pairs = graft.operators.Dedup.incrementalMinhashEstimatedUnordered(
-      addedDocs, n, numHashes, bands, minJ, sigStatePath)
+    var pairs =
+      if (graft.operators.Dedup.staticallyEmpty(addedDocs))
+        addedDocs.select(col("doc_id").as("doc_a"), col("doc_id").as("doc_b"),
+          lit(0.0).as("est_jaccard"))
+      else graft.operators.Dedup.incrementalMinhashEstimatedUnordered(
+        addedDocs, n, numHashes, bands, minJ, sigStatePath)
     // embeddings diff fingerprints the vector bytes via the canonical
     // string form (stable for a given array, engine-portable)
     def fp(e: org.apache.spark.sql.DataFrame) =
@@ -628,18 +628,19 @@ object Pipelines {
     // key-filtered against the live view, so a duplicate run (retry)
     // appends nothing instead of duplicating assignment rows — which
     // would corrupt top-k results (a duplicated neighbor occupies two
-    // ranks) until the next compaction
-    val addedEmb = newEmb.join(
+    // ranks) until the next compaction. Doc-only turns (the stream
+    // drain's shape) carry a provably-empty embedding delta: appending
+    // it writes zero assignment rows but still costs a job and leaves
+    // an empty file in the index dir per turn, and loading the live
+    // view for its anti-join costs the index's footer reads — skip all
+    // three.
+    val newEmbAdded = newEmb.join(
       embChanges.filter(col("status") === "added").select("vec_id"), Seq("vec_id"))
-      .join(graft.operators.Similarity.loadIvfIndex(spark, ivfPath)._2
-        .select(col("vec_id")), Seq("vec_id"), "left_anti")
-    // doc-only turns (the stream drain's shape) carry a provably-empty
-    // embedding delta: appending it writes zero assignment rows but
-    // still costs a job and leaves an empty file in the index dir per
-    // turn — skip both
     label("ivf tier: append")
-    if (!graft.operators.Dedup.staticallyEmpty(addedEmb))
-      graft.operators.Similarity.appendToIvfIndex(addedEmb, spark, ivfPath)
+    if (!graft.operators.Dedup.staticallyEmpty(newEmbAdded))
+      graft.operators.Similarity.appendToIvfIndex(newEmbAdded
+        .join(graft.operators.Similarity.loadIvfIndex(spark, ivfPath)._2
+          .select(col("vec_id")), Seq("vec_id"), "left_anti"), spark, ivfPath)
     // optional PQ tier: same change-routing as IVF — added vectors
     // encode against the persisted codebooks (key-filtered, so a
     // retried turn appends nothing), edits heal by the selected mode;
@@ -658,12 +659,10 @@ object Pipelines {
           graft.operators.Similarity.appendToPqIndex(changedEmb, spark, pp)
         }
       }
-      val addedPq = newEmb.join(
-        embChanges.filter(col("status") === "added").select("vec_id"), Seq("vec_id"))
-        .join(graft.operators.Similarity.loadPqIndex(spark, pp)._2
-          .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
-      if (!graft.operators.Dedup.staticallyEmpty(addedPq))
-        graft.operators.Similarity.appendToPqIndex(addedPq, spark, pp)
+      if (!graft.operators.Dedup.staticallyEmpty(newEmbAdded))
+        graft.operators.Similarity.appendToPqIndex(newEmbAdded
+          .join(graft.operators.Similarity.loadPqIndex(spark, pp)._2
+            .select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti"), spark, pp)
     }
     // ---- post-turn cadence-gated maintenance: the tombstone mode's
     // read-side tax (measured ~2x a clean drain at 1% edits) is only
@@ -834,8 +833,7 @@ object Pipelines {
                             bpeVocabPath: Option[String] = None,
                             encodedPath: Option[String] = None,
                             bpeArtifact: Option[graft.operators.TextAnalysis.BpeVocabArtifact] = None,
-                            currentDocs: Option[org.apache.spark.sql.DataFrame] = None,
-                            dsirKnownState: Option[(Int, Int, Set[String])] = None)
+                            currentDocs: Option[org.apache.spark.sql.DataFrame] = None)
       : Map[String, org.apache.spark.sql.DataFrame] = {
     require(healVia == "tombstone" || currentDocs.isDefined,
       "compact-mode healing rebuilds history from the full corpus — " +
@@ -848,8 +846,7 @@ object Pipelines {
       sigStatePath, ivfPath, n, numHashes, bands, minJ, healEdits,
       dsirStatePath, dsirTargetSource, healVia, runId, pqPath, maintain,
       maxTombstoneFrac, manifestPath, bpeVocabPath, encodedPath,
-      bpeArtifact, compactionDocs = currentDocs,
-      dsirKnownState = dsirKnownState)
+      bpeArtifact, compactionDocs = currentDocs)
   }
 
   /** EP6 (extension) — the end-to-end CURATION RUN: the three quality

@@ -18,7 +18,7 @@ object ScaleProbe {
     val mult = if (args.length > 1) args(1).toInt else 10
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
     // e.g. SPARK_GRAFT_SYSPROPS="graft.cc=star" to A/B a mode flag
     // (same contract as BenchOne)
     sys.env.get("SPARK_GRAFT_SYSPROPS").foreach(_.split(",").foreach { kv =>

@@ -1409,9 +1409,10 @@ object TextAnalysis {
     * state writer, so the q155 state-equals-full-corpus contract can
     * never drift on the counting rule.
     */
-  private def dsirBucketCounts(tf: DataFrame, targetSource: String): DataFrame = {
+  private def dsirBucketCounts(tf: DataFrame, targetSource: String,
+                               by: Seq[String] = Nil): DataFrame = {
     val isTarget = col("source") === targetSource
-    tf.groupBy(col("b")).agg(
+    tf.groupBy((by :+ "b").map(col): _*).agg(
       sum(when(isTarget, col("tf")).otherwise(0L)).as("tc"),
       sum(when(!isTarget, col("tf")).otherwise(0L)).as("sc"))
   }
@@ -1460,20 +1461,21 @@ object TextAnalysis {
     * out of the scored population, exactly as zero-token docs do at
     * ngram = 1.
     */
-  private def dsirTf(docs: DataFrame, buckets: Int, ngram: Int): DataFrame = {
+  private def dsirTf(docs: DataFrame, buckets: Int, ngram: Int,
+                     carry: Seq[String] = Nil): DataFrame = {
+    val keys = (Seq("doc_id", "source") ++ carry).map(col)
     val grams =
       if (ngram == 1)
-        docs.select(col("doc_id"), col("source"), explode(tokens).as("t"))
+        docs.select(keys :+ explode(tokens).as("t"): _*)
       else
-        docs.select(col("doc_id"), col("source"), tokens.as("w"))
+        docs.select(keys :+ tokens.as("w"): _*)
           .filter(size(col("w")) >= ngram)
-          .select(col("doc_id"), col("source"), explode(expr(
+          .select(keys :+ explode(expr(
             s"transform(sequence(0, size(w)-$ngram), i -> array_join(slice(w, i+1, $ngram), ' '))"
-          )).as("t"))
+          )).as("t"): _*)
     grams
-      .select(col("doc_id"), col("source"),
-        (PortableHash.hash32(col("t")) % buckets).as("b"))
-      .groupBy(col("doc_id"), col("source"), col("b"))
+      .select(keys :+ (PortableHash.hash32(col("t")) % buckets).as("b"): _*)
+      .groupBy(keys :+ col("b"): _*)
       .agg(count(lit(1)).as("tf"))
   }
 
@@ -1513,6 +1515,24 @@ object TextAnalysis {
     appendDsirCells(
       dsirBucketCounts(dsirTf(batch, buckets, ngram), targetSource),
       statePath, buckets, ngram, s"persist:$batchId", batchId.nonEmpty, knownBids)
+  }
+
+  /** [[persistDsirState]] for several batches in one job: each row's
+    * batch id is in its `bidCol` column, cells are counted per (batch
+    * id, bucket), and each batch's cells carry the stamp
+    * `persist:<batch id>` — the stamp its own [[persistDsirState]] call
+    * would land, so a later replay check decides per batch. No replay
+    * check here: the caller passes only rows of batches whose stamp the
+    * state lacks.
+    */
+  def persistDsirStateByBatch(batch: DataFrame, bidCol: String, targetSource: String,
+                              statePath: String, buckets: Int, ngram: Int): Unit = {
+    require(buckets >= 2, s"buckets must be >= 2 (got $buckets)")
+    require(ngram >= 1, s"ngram must be >= 1 (got $ngram)")
+    writeDsirCells(
+      dsirBucketCounts(dsirTf(batch, buckets, ngram, Seq(bidCol)), targetSource, Seq(bidCol))
+        .withColumn("bid", concat(lit("persist:"), col(bidCol))).drop(bidCol),
+      statePath, buckets, ngram)
   }
 
   /** The shared DSIR state append: stamps the param and batch-identity
@@ -1587,7 +1607,6 @@ object TextAnalysis {
                               knownBids: Option[scala.collection.Set[String]] = None): Unit = {
     val spark = cells.sparkSession
     migrateDsirStateIfNeeded(spark, statePath)
-    val st = StateTable(spark, statePath)
     // the replay check: a caller holding a pre-read bid snapshot (the
     // daily turn reads the state ONCE via dsirStateSummary) answers it
     // as a set lookup; anyone else pays one small read. The snapshot is
@@ -1596,13 +1615,20 @@ object TextAnalysis {
     // are missing from it too, so exactly the unwritten ones land.
     if (checkReplay && (knownBids match {
       case Some(bids) => bids.contains(bid)
-      case None => st.exists(StateTable.Buckets) &&
+      case None => StateTable(spark, statePath).exists(StateTable.Buckets) &&
         !dsirCells(spark, statePath).filter(col("bid") === bid).limit(1).isEmpty
     })) return
-    st.append(StateTable.Buckets, cells
-      .withColumn("nb", lit(buckets))
-      .withColumn("ng", lit(ngram))
-      .withColumn("bid", lit(bid)))
+    writeDsirCells(cells.withColumn("bid", lit(bid)), statePath, buckets, ngram)
+  }
+
+  /** Append stamped (b, tc, sc, bid) cells with the param stamps. */
+  private def writeDsirCells(cells: DataFrame, statePath: String,
+                             buckets: Int, ngram: Int): Unit = {
+    val spark = cells.sparkSession
+    migrateDsirStateIfNeeded(spark, statePath)
+    StateTable(spark, statePath).append(StateTable.Buckets, cells
+      .select(col("b"), col("tc"), col("sc"),
+        lit(buckets).as("nb"), lit(ngram).as("ng"), col("bid")))
   }
 
   /** RETRACT a previously persisted batch's contribution from the

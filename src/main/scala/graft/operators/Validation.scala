@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   *  - `timestamp` older than 7 days → warn with a count.
   *
   * The pandas original makes four separate passes over the frame; here
-  * the null/dup/stale checks collapse into a single aggregate job
-  * (one scan, map-side partial aggregation) — at 100 TB the difference
-  * between one scan and four is the whole game. Emptiness uses
-  * `df.isEmpty` (reads at most one partition), not `count() == 0`.
-  * A caller's own aggregates (a run summary) ride the same job.
+  * the emptiness/null/dup/stale checks collapse into a single aggregate
+  * job (one scan, map-side partial aggregation) — at 100 TB the
+  * difference between one scan and four is the whole game. Emptiness is
+  * the aggregate's own row count, not a separate `isEmpty` action. A
+  * caller's own aggregates (a run summary) ride the same job.
   */
 object Validation {
 
@@ -41,14 +41,13 @@ object Validation {
     * [[Report.extra]].
     */
   def check(df: DataFrame, asOf: java.sql.Date, extra: Seq[Column] = Nil): Report = {
-    if (df.isEmpty) return Report(empty = true, 0L, 0L, 0L)
-
     val cols = df.columns
     val hasPlayedAt = cols.contains("played_at")
     val hasTimestamp = cols.contains("timestamp")
 
     val anyNull = cols.map(c => col(c).isNull).reduce(_ || _)
     val aggs = Seq(
+      count(lit(1)).as("rows"),
       sum(when(anyNull, 1L).otherwise(0L)).as("nulls"),
       // null-safe duplicate count, matching pandas Series.is_unique
       // (the reference's PK check, spotify_etl2.py:61): repeated NULL
@@ -69,6 +68,7 @@ object Validation {
        else lit(0L)).as("stale")) ++ extra
 
     val r = df.agg(aggs.head, aggs.tail: _*).head()
+    if (r.getAs[Long]("rows") == 0L) return Report(empty = true, 0L, 0L, 0L)
     val report = Report(
       empty = false,
       duplicatePlayedAt = r.getAs[Long]("dups"),

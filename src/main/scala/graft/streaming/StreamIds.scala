@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Content-derived micro-batch identities for the streaming ingest
@@ -21,23 +21,62 @@ object StreamIds {
     * columns, plus the row count. Order-free (sums), so stable across
     * shuffle layouts and arrival orders of the same rows.
     */
-  def contentBid(batch: DataFrame, fpCols: Seq[Column]): String = {
+  private def lanes(fpCols: Seq[Column]): Seq[Column] = {
     def lane(seed: String) = coalesce(sum(graft.functions.PortableHash.hash32(
       concat_ws(" ", (lit(seed) +: fpCols): _*))), lit(0L))
-    val r = batch.agg(lane("l1"), lane("l2"), count(lit(1))).head()
-    f"${r.getLong(0)}%x-${r.getLong(1)}%x-${r.getLong(2)}%x"
+    Seq(lane("l1"), lane("l2"), count(lit(1)))
   }
 
-  /** Digest of a documents micro-batch: (doc_id, source, text). */
-  def docBid(batch: DataFrame): String =
-    contentBid(batch, Seq(col("doc_id").cast("string"),
-      coalesce(col("source").cast("string"), lit("")),
-      md5(coalesce(col("text"), lit("")))))
+  private def render(r: Row, at: Int): String =
+    f"${r.getLong(at)}%x-${r.getLong(at + 1)}%x-${r.getLong(at + 2)}%x"
 
-  /** Digest of an embeddings micro-batch: (vec_id, vector bytes via
-    * the canonical array string form — the same fingerprint the daily
-    * turn's embedding diff uses). */
-  def embBid(batch: DataFrame): String =
-    contentBid(batch, Seq(col("vec_id").cast("string"),
-      md5(coalesce(col("embedding").cast("string"), lit("")))))
+  def contentBid(batch: DataFrame, fpCols: Seq[Column]): String = {
+    val ls = lanes(fpCols)
+    render(batch.agg(ls.head, ls.tail: _*).head(), 0)
+  }
+
+  /** The column [[withFile]] adds: each row's source file path. */
+  val FileCol = "_file"
+
+  /** `df` (a file scan, streaming or not) with each row's source file
+    * path in [[FileCol]]. A micro-batch handed to foreachBatch has lost
+    * its scan's hidden `_metadata` column, so a stream adds it at the
+    * source. */
+  def withFile(df: DataFrame): DataFrame = df.withColumn(FileCol, col("_metadata.file_path"))
+
+  /** [[contentBid]] of each source file of a [[withFile]] micro-batch,
+    * keyed by the file's path, in ONE aggregate job. A file's digest is
+    * the digest a micro-batch holding that file alone gets. A file with
+    * no rows carries no content and is absent from the map.
+    */
+  def fileBids(batch: DataFrame, fpCols: Seq[Column]): Map[String, String] = {
+    val ls = lanes(fpCols)
+    batch.groupBy(col(FileCol)).agg(ls.head, ls.tail: _*)
+      .collect().map(r => r.getString(0) -> render(r, 1)).toMap
+  }
+
+  /** The fingerprint of a documents row: (doc_id, source, text). */
+  val docFp: Seq[Column] = Seq(col("doc_id").cast("string"),
+    coalesce(col("source").cast("string"), lit("")),
+    md5(coalesce(col("text"), lit(""))))
+
+  /** The fingerprint of an embeddings row: (vec_id, vector bytes via the
+    * canonical array string form — the same fingerprint the daily turn's
+    * embedding diff uses). */
+  val embFp: Seq[Column] = Seq(col("vec_id").cast("string"),
+    md5(coalesce(col("embedding").cast("string"), lit(""))))
+
+  /** Digest of a documents micro-batch. */
+  def docBid(batch: DataFrame): String = contentBid(batch, docFp)
+
+  /** The id of a group of files ingested as one unit: the file's own
+    * digest for one file (so a one-file group and a one-file
+    * micro-batch share every marker), else a digest over the sorted
+    * member digests.
+    */
+  def groupBid(members: Set[String]): String =
+    if (members.size == 1) members.head
+    else "g" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(members.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      .take(16).map(b => f"$b%02x").mkString
 }

@@ -89,7 +89,7 @@ class PipelinesSpec extends AnyFunSuite {
     assert(back.count() === 150L && back.select("played_at").distinct().count() === 150L)
   }
 
-  test("EP2 on a fresh sink runs three job-launching SQL executions; the XCom line is unchanged") {
+  test("EP2 on a fresh sink runs two job-launching SQL executions; the XCom line is unchanged") {
     val feed = plays("2024-01-10T22:00:00Z", 150).toDS()
     val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -108,8 +108,9 @@ class PipelinesSpec extends AnyFunSuite {
       org.apache.spark.TestListenerBus.drain(sc)
       out
     } finally sc.removeSparkListener(listener)
-    // isEmpty, the validation aggregate (which carries the summary), the append
-    assert(executions.size === 3, s"SQL executions: $executions")
+    // the validation aggregate (which carries the emptiness count and the
+    // summary), the append
+    assert(executions.size === 2, s"SQL executions: $executions")
     // the line the separate summary action used to render, byte for byte
     val flat = graft.operators.SpotifyFlatten.recentlyPlayed(
       graft.sources.SpotifySchemas.parse(feed, graft.sources.SpotifySchemas.recentlyPlayedPayload))
@@ -130,9 +131,11 @@ class PipelinesSpec extends AnyFunSuite {
   }
 
   test("EP2 end-to-end: empty input short-circuits with no_data status") {
+    val dir = tmp
     val json = Pipelines.recentlyPlayedEtl(spark,
-      Seq("""{"items":[]}""").toDS(), s"$tmp/tbl", java.sql.Date.valueOf("2024-01-12"))
-    assert(json.contains("no_data"))
+      Seq("""{"items":[]}""").toDS(), s"$dir/tbl", java.sql.Date.valueOf("2024-01-12"))
+    assert(json === """{"tracks_processed":0,"status":"no_data"}""")
+    assert(!new java.io.File(s"$dir/tbl").exists()) // sink untouched
   }
 
   test("EP3 end-to-end: csv + banker's-rounded summary from one cached frame") {

@@ -73,6 +73,14 @@ class StreamIngestSpec extends AnyFunSuite {
   }
 
   test("stream-fed daily turn: N micro-batch turns equal one batch turn; replay is a no-op") {
+    turnsEqualOneBatchTurn(Some(1))
+  }
+
+  test("stream-fed daily turn at the default grouping: one turn per feed equals one batch turn; replay is a no-op") {
+    turnsEqualOneBatchTurn(None)
+  }
+
+  private def turnsEqualOneBatchTurn(maxFilesPerTrigger: Option[Int]): Unit = {
     import spark.implicits._
     val st = Files.createTempDirectory("graft_turnstream").toString
     val day1Docs = docs.filter(col("doc_id") % 5 =!= 0)
@@ -90,7 +98,13 @@ class StreamIngestSpec extends AnyFunSuite {
     embs.filter(col("vec_id") >= 16 && col("vec_id") % 5 === 0).repartition(2)
       .write.parquet(st + "/embfeed")
     streaming.TurnStream.dailyTurns(spark, st + "/docfeed", st + "/embfeed",
-      st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt")
+      st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt",
+      maxFilesPerTrigger = maxFilesPerTrigger)
+    val fs = new org.apache.hadoop.fs.Path(st).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(st + "/pairs"))
+      .count(_.getPath.getName.startsWith("batch_")) === (if (maxFilesPerTrigger.isEmpty) 2 else 6),
+      "one turn per file at maxFilesPerTrigger = 1, one per feed at the default")
     val streamed = streaming.TurnStream.emittedPairs(spark, st + "/pairs")
       .collect().map(_.toSeq).toSeq
     assert(streamed === refPairs,
@@ -107,7 +121,8 @@ class StreamIngestSpec extends AnyFunSuite {
     val sigCount = spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count()
     val ivfBefore = spark.read.parquet(member(st + "/ivf", StateTable.Assignments)).count()
     streaming.TurnStream.dailyTurns(spark, st + "/docfeed", st + "/embfeed",
-      st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt2")
+      st + "/mh", st + "/ivf", st + "/pairs", st + "/ckpt2",
+      maxFilesPerTrigger = maxFilesPerTrigger)
     assert(spark.read.parquet(member(st + "/mh", StateTable.Sigs)).count() === sigCount)
     assert(spark.read.parquet(member(st + "/ivf", StateTable.Assignments)).count() === ivfBefore)
     val replayed = streaming.TurnStream.emittedPairs(spark, st + "/pairs")
@@ -417,9 +432,11 @@ class StreamIngestSpec extends AnyFunSuite {
     docs.filter(col("doc_id") % 5 === 0).repartition(4).write.parquet(st + "/docfeed")
     embs.filter(col("vec_id") >= 16 && col("vec_id") % 5 === 0).repartition(2)
       .write.parquet(st + "/embfeed")
+    // one file per turn: the layout a one-file-per-batch drain leaves
+    // (the multi-file spec below folds the default's group dirs)
     def drain(ckpt: String): Unit =
       streaming.TurnStream.dailyTurns(spark, st + "/docfeed", st + "/embfeed",
-        st + "/mh", st + "/ivf", st + "/pairs", st + s"/$ckpt")
+        st + "/mh", st + "/ivf", st + "/pairs", st + s"/$ckpt", maxFilesPerTrigger = Some(1))
     def pairs() = streaming.TurnStream.emittedPairs(spark, st + "/pairs")
       .collect().map(_.toSeq).toSeq
     val fs = new org.apache.hadoop.fs.Path(st).getFileSystem(
@@ -496,8 +513,9 @@ class StreamIngestSpec extends AnyFunSuite {
       val mf = fs.listStatus(mdir).map(_.getPath)
         .filter(_.getName.endsWith(".manifest")).head
       val in = fs.open(mf)
+      // a group line is "<group id> [<member digest> ...]"
       try new String(in.readAllBytes(), "UTF-8").split("\n").tail
-        .filter(_.nonEmpty).head
+        .filter(_.nonEmpty).head.split(" ").head
       finally in.close()
     }
     val zombie = new org.apache.hadoop.fs.Path(s"$st/pairs/batch_$bid")
@@ -623,6 +641,212 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(e.getMessage.contains("maxFilesPerTrigger"))
   }
 
+  // ---- per-file exactly-once of the stream-fed turn: q188's fixture
+  // (day-0 signatures, IVF and DSIR over the day-1 docs and vectors,
+  // the rest as feed files); every drain shape below must leave the
+  // state and the pairs sink equal to ONE batch turn over the same rows
+
+  private def feedDocs = docs.filter(col("doc_id") % 5 === 0)
+  private def feedEmb = embs.filter(col("vec_id") >= 16 && col("vec_id") % 5 === 0)
+
+  /** Day-0 state under a fresh root; the caller writes the feeds. */
+  private def stageDay0(prefix: String): String = {
+    val st = Files.createTempDirectory(prefix).toString
+    val day1Docs = docs.filter(col("doc_id") % 5 =!= 0)
+    operators.Dedup.persistMinhashSignatures(day1Docs, 3, 16, 4, st + "/mh")
+    operators.Similarity.buildIvfIndex(
+      embs.filter(col("vec_id") < 16 || col("vec_id") % 5 =!= 0), nlist = 16, path = st + "/ivf")
+    TextAnalysis.persistDsirState(day1Docs, "src0", st + "/dsir")
+    st
+  }
+
+  private def drainTurns(st: String, ckpt: String, maxFilesPerTrigger: Option[Int] = None): Unit =
+    streaming.TurnStream.dailyTurns(spark, st + "/docfeed", st + "/embfeed",
+      st + "/mh", st + "/ivf", st + "/pairs", st + s"/$ckpt",
+      maxFilesPerTrigger = maxFilesPerTrigger, dsirStatePath = Some(st + "/dsir"))
+
+  /** Signature rows, IVF rows, DSIR bucket sums and emitted pairs —
+    * rows as sorted multisets, so a duplicated row shows. */
+  private def turnOutcome(st: String) = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    (rows(operators.Dedup.loadSignatures(spark, st + "/mh")),
+      rows(Similarity.loadIvfIndex(spark, st + "/ivf")._2.select(col("vec_id"), col("cell"))),
+      rows(spark.read.parquet(member(st + "/dsir", StateTable.Buckets))
+        .groupBy(col("b")).agg(sum(col("tc")), sum(col("sc")))),
+      rows(streaming.TurnStream.emittedPairs(spark, st + "/pairs")))
+  }
+
+  /** [[turnOutcome]] of one batch turn over the whole feed. */
+  private lazy val oneShotOutcome = {
+    val st = stageDay0("graft_turn_oneshot")
+    val day1Docs = docs.filter(col("doc_id") % 5 =!= 0)
+    val d1e = embs.filter(col("vec_id") < 16 || col("vec_id") % 5 =!= 0)
+    val turn = Pipelines.dailyIncremental(spark, day1Docs, docs, d1e, embs,
+      st + "/mh", st + "/ivf", dsirStatePath = Some(st + "/dsir"), runId = Some("oneshot"))
+    turn("dedup_pairs_raw").write.parquet(st + "/pairs/batch_oneshot")
+    turnOutcome(st)
+  }
+
+  private def fsOf(st: String) = new org.apache.hadoop.fs.Path(st)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def batchDirs(st: String): Seq[String] =
+    fsOf(st).listStatus(new org.apache.hadoop.fs.Path(st + "/pairs")).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("batch_")).sorted
+
+  private def feedFiles(dir: String): Seq[org.apache.hadoop.fs.Path] =
+    fsOf(dir).listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .map(_.getPath)
+
+  test("per-file exactly-once: a one-file-per-batch drain re-drains at the default as a no-op, and the reverse") {
+    val st = stageDay0("graft_turn_regroup")
+    feedDocs.repartition(4).write.parquet(st + "/docfeed")
+    feedEmb.repartition(2).write.parquet(st + "/embfeed")
+    drainTurns(st, "ckpt1", Some(1))
+    // the layout the one-file-per-batch drain has always left: one pairs
+    // dir and one DSIR stamp per file, named by the file's own digest
+    val docDigests = feedFiles(st + "/docfeed").map(f =>
+      streaming.StreamIds.docBid(spark.read.parquet(f.toString)))
+    val embDigests = feedFiles(st + "/embfeed").map(f =>
+      streaming.StreamIds.contentBid(spark.read.parquet(f.toString), streaming.StreamIds.embFp))
+    assert(batchDirs(st) === (docDigests ++ embDigests).map("batch_" + _).sorted)
+    assert(!fsOf(st).exists(new org.apache.hadoop.fs.Path(st + "/pairs/_pairs_groups")),
+      "one-file groups need no member list")
+    assert(TextAnalysis.dsirStateSummary(spark, st + "/dsir")._3.filter(_.startsWith("persist:stream:")) ===
+      docDigests.map(d => s"persist:stream:$d:added").toSet)
+    assert(turnOutcome(st) === oneShotOutcome)
+    val cells = spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count()
+    drainTurns(st, "ckpt2")
+    assert(turnOutcome(st) === oneShotOutcome, "a regrouped re-drain must be a no-op")
+    assert(spark.read.parquet(member(st + "/dsir", StateTable.Buckets)).count() === cells)
+    assert(batchDirs(st) === (docDigests ++ embDigests).map("batch_" + _).sorted)
+
+    // the reverse: a default drain, then a one-file-per-batch re-drain
+    val rev = stageDay0("graft_turn_regroup_rev")
+    feedDocs.repartition(4).write.parquet(rev + "/docfeed")
+    feedEmb.repartition(2).write.parquet(rev + "/embfeed")
+    drainTurns(rev, "ckpt1")
+    assert(batchDirs(rev).size === 2, "one group per feed")
+    assert(turnOutcome(rev) === oneShotOutcome)
+    val revDirs = batchDirs(rev)
+    drainTurns(rev, "ckpt2", Some(1))
+    assert(turnOutcome(rev) === oneShotOutcome, "a regrouped re-drain must be a no-op")
+    assert(batchDirs(rev) === revDirs)
+  }
+
+  test("per-file exactly-once: files landing after a drain are the only ones the re-drain ingests") {
+    val st = stageDay0("graft_turn_grow")
+    feedDocs.filter(col("doc_id") % 10 === 0).repartition(2).write.parquet(st + "/docfeed")
+    feedEmb.repartition(2).write.parquet(st + "/embfeed")
+    drainTurns(st, "ckpt1")
+    val first = batchDirs(st)
+    val old = feedFiles(st + "/docfeed").toSet
+    feedDocs.filter(col("doc_id") % 10 =!= 0).repartition(2)
+      .write.mode("append").parquet(st + "/docfeed")
+    val landed = feedFiles(st + "/docfeed").filterNot(old)
+    assert(landed.size === 2)
+    drainTurns(st, "ckpt2")
+    // one new group, and exactly the two new files are its members
+    val added = batchDirs(st).diff(first)
+    assert(added === Seq("batch_" + streaming.StreamIds.groupBid(landed.map(f =>
+      streaming.StreamIds.docBid(spark.read.parquet(f.toString))).toSet)))
+    assert(turnOutcome(st) === oneShotOutcome)
+  }
+
+  test("per-file exactly-once: a torn multi-file group is retried whole under a different grouping") {
+    val st = stageDay0("graft_turn_torn")
+    feedDocs.repartition(4).write.parquet(st + "/docfeed")
+    feedEmb.repartition(2).write.parquet(st + "/embfeed")
+    drainTurns(st, "ckpt1")
+    // tear the doc group: its member list and state writes stay, its
+    // commit point and its turn marker go
+    val docGroup = StreamIngestSpec.memberLists(fsOf(st), st + "/pairs")
+      .collectFirst { case (g, ms) if ms.size == 4 => g }.get
+    val fs = fsOf(st)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$st/pairs/batch_$docGroup/_SUCCESS"), false))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(st + "/mh/_turns"), true))
+    assert(turnOutcome(st)._4 !== oneShotOutcome._4, "precondition: the doc pairs are torn away")
+    // the retry takes one file per batch: the first file's turn must
+    // pull in the other three members, so no member runs on its own
+    drainTurns(st, "ckpt2", Some(1))
+    assert(turnOutcome(st) === oneShotOutcome)
+    assert(batchDirs(st).count(_ === s"batch_$docGroup") === 1 && batchDirs(st).size === 2,
+      s"the torn group commits under its own id and nothing else lands (got ${batchDirs(st)})")
+  }
+
+  test("per-file exactly-once: two content-identical files in one batch are ingested once") {
+    val st = stageDay0("graft_turn_dupfile")
+    feedDocs.repartition(2).write.parquet(st + "/docfeed")
+    feedEmb.repartition(2).write.parquet(st + "/embfeed")
+    val src = feedFiles(st + "/docfeed").head
+    org.apache.hadoop.fs.FileUtil.copy(fsOf(st), src, fsOf(st),
+      new org.apache.hadoop.fs.Path(st + "/docfeed/part-copy.parquet"), false,
+      spark.sparkContext.hadoopConfiguration)
+    drainTurns(st, "ckpt1")
+    assert(turnOutcome(st) === oneShotOutcome, "the copy must add no row, cell or pair")
+    drainTurns(st, "ckpt2", Some(1))
+    assert(turnOutcome(st) === oneShotOutcome)
+  }
+
+  test("compactPairs folds multi-file groups with their members; a re-drain stays a no-op") {
+    val st = stageDay0("graft_turn_compact_groups")
+    feedDocs.repartition(4).write.parquet(st + "/docfeed")
+    feedEmb.repartition(2).write.parquet(st + "/embfeed")
+    drainTurns(st, "ckpt1")
+    val groups = StreamIngestSpec.memberLists(fsOf(st), st + "/pairs")
+    assert(groups.values.map(_.size).toSeq.sorted === Seq(2, 4))
+    streaming.TurnStream.compactPairs(spark, st + "/pairs")
+    val entries = fsOf(st).listStatus(new org.apache.hadoop.fs.Path(st + "/pairs"))
+      .toSeq.map(_.getPath.getName).sorted
+    assert(entries === Seq("_pairs_base", "_pairs_manifest"),
+      s"group dirs and member lists fold into the manifest (got $entries)")
+    assert(streaming.TurnStream.latestPairsManifest(spark, st + "/pairs").groups ===
+      groups.map { case (g, ms) => g -> ms.toSeq.sorted })
+    assert(turnOutcome(st) === oneShotOutcome)
+    drainTurns(st, "ckpt2")
+    drainTurns(st, "ckpt3", Some(1))
+    assert(batchDirs(st).isEmpty, "done files must not land again")
+    assert(turnOutcome(st) === oneShotOutcome)
+  }
+
+  test("a q188-shaped drain at the default runs one micro-batch per feed and at most 30 SQL executions") {
+    val st = stageDay0("graft_turn_actions")
+    feedDocs.repartition(4).write.parquet(st + "/docfeed")
+    feedEmb.repartition(2).write.parquet(st + "/embfeed")
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
+    val batches = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          executions.incrementAndGet(); ()
+        case _ =>
+      }
+    }
+    val progress = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.durationMs.containsKey("addBatch")) { batches.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(jobs)
+    spark.streams.addListener(progress)
+    try {
+      drainTurns(st, "ckpt")
+      org.apache.spark.TestListenerBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(jobs)
+      spark.streams.removeListener(progress)
+    }
+    assert(batches.get === 2, "one micro-batch per feed")
+    assert(executions.get <= 30, s"SQL executions: ${executions.get}")
+    assert(turnOutcome(st) === oneShotOutcome)
+  }
+
   test("IVF stream drain rebuilds the full-build assignments; replay appends nothing") {
     val bucket = Sampling.hashBucket(col("vec_id").cast("string"))
     val full = Files.createTempDirectory("graft_vs_full").toString + "/idx"
@@ -660,5 +884,18 @@ class StreamIngestSpec extends AnyFunSuite {
       "streamed codes against the frozen codebooks must equal the full build")
     streaming.VectorStream.incrementalPq(spark, st + "/feed", st + "/idx", st + "/ckpt2")
     assert(rows(st + "/idx") === fullRows, "a full replay must not change the index")
+  }
+}
+
+object StreamIngestSpec {
+  /** A pairs sink's uncompacted member lists: group id -> member digests. */
+  def memberLists(fs: org.apache.hadoop.fs.FileSystem, pairsOut: String): Map[String, Set[String]] = {
+    val dir = new org.apache.hadoop.fs.Path(pairsOut + "/_pairs_groups")
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir).toSeq.map { f =>
+      val in = fs.open(f.getPath)
+      val lines = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      f.getPath.getName -> lines.split("\n").filter(_.nonEmpty).map(_.split("\t").head).toSet
+    }.toMap
   }
 }
