@@ -89,18 +89,21 @@ object Pipelines {
   }
 
   /** EP3 — recently-played analysis: ranked flatten → display + CSV +
-    * summary, one cached frame feeding all three consumers
-    * (new.py:211-267; the cache mirrors the single pandas frame).
+    * summary, one pinned frame feeding all three consumers
+    * (new.py:211-267; the pin mirrors the single pandas frame). The pin
+    * is a checkpoint, not a cache: AQE does not coalesce a cached
+    * plan's final shuffle, so a cached rank would keep every shuffle
+    * partition, where a small feed pinned this way ranks and lands in
+    * one.
     */
   def recentlyPlayedAnalysis(spark: SparkSession, payloads: Dataset[String], csvPath: String): String = {
-    val ranked = SpotifyFlatten.rankedRecentlyPlayed(
-      SpotifySchemas.parse(payloads, SpotifySchemas.recentlyPlayedPayload))
-    ranked.cache()
+    val ranked = graft.operators.Dedup.materialize(SpotifyFlatten.rankedRecentlyPlayed(
+      SpotifySchemas.parse(payloads, SpotifySchemas.recentlyPlayedPayload)))
     try {
       Sinks.display(ranked)
       Sinks.csv(ranked, csvPath)
       Sinks.xcomJson(RunSummaries.analysisSummary(ranked))
-    } finally ranked.unpersist()
+    } finally graft.operators.Dedup.releaseCheckpoint(ranked)
   }
 
   /** EP4 (extension) — the near-dup pair table as a SHARED lake

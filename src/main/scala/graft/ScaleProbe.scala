@@ -567,25 +567,19 @@ object ScaleProbe {
         println(f"""{"op":"stream_encode","mult":$mult,"files":$files,"batch_sec":$batchSec%.2f,"stream_sec":$streamSec%.2f,"ratio":${streamSec / batchSec}%.2f}""")
       }
     }
-    // q176's budget selection: the stamped range-partition prefix sum
-    // vs the naive global-window form (row_number + running sum over
-    // an UNPARTITIONED window — Spark moves every row to ONE
+    // q176's budget selection: GlobalRank's range-partitioned prefix
+    // sum vs the naive global-window form (row_number + running sum
+    // over an UNPARTITIONED window — Spark moves every row to ONE
     // partition). Same output row-for-row (PropertyFuzzSpec /
-    // QuantLmSkewSpec); this prices the difference and documents why
-    // the machinery exists: the window form's single-partition sort is
-    // the classic 100 TB scale-killer.
+    // QuantLmSkewSpec); this prices the difference: the window form's
+    // single-partition sort is the classic 100 TB scale-killer.
     if (only.isEmpty || only.contains("budget_select")) {
       val TA = graft.operators.TextAnalysis
       val budget = 4000L * mult
-      // force the stamped plan: the production dispatch would route
-      // probe-scale corpora to the window plan, and this arm exists to
-      // price the stamped machinery itself
-      sys.props("graft.budget.windowMaxRows") = "0"
       val t0 = System.nanoTime()
-      try TA.dsirResampleBudget(docs, "src0", budget)
+      TA.dsirResampleBudget(docs, "src0", budget)
         .write.format("noop").mode("overwrite").save()
-      finally sys.props.remove("graft.budget.windowMaxRows")
-      val stampedSec = (System.nanoTime() - t0) / 1e9
+      val rankSec = (System.nanoTime() - t0) / 1e9
       val w = org.apache.spark.sql.expressions.Window
         .orderBy($"avg_log_ratio".desc, $"doc_id")
       val t1 = System.nanoTime()
@@ -596,7 +590,7 @@ object ScaleProbe {
         .filter($"cum_tokens" - $"n_tokens" < budget)
         .write.format("noop").mode("overwrite").save()
       val windowSec = (System.nanoTime() - t1) / 1e9
-      println(f"""{"op":"budget_select","mult":$mult,"stamped_sec":$stampedSec%.2f,"window_sec":$windowSec%.2f,"ratio":${windowSec / stampedSec}%.2f}""")
+      println(f"""{"op":"budget_select","mult":$mult,"global_rank_sec":$rankSec%.2f,"window_sec":$windowSec%.2f,"ratio":${windowSec / rankSec}%.2f}""")
     }
     // q184's stream-fed daily turn vs the one-shot batch turn over the
     // SAME grow-only feed: prices the per-micro-batch-turn premium

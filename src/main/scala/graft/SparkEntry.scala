@@ -1508,13 +1508,14 @@ object SparkEntry {
     // played-shaped payloads (one item each; error events get a NULL
     // track, which the flatten drops per reference semantics), ranked
     // by the REAL SpotifyFlatten.rankedRecentlyPlayed. Input bounded to
-    // <1000 rows — the operator's global rank window mirrors the
-    // reference's ≤50-item API contract (SURVEY.md W1). ----
+    // <1000 rows. Rows come out in rank order: ordering by the rank's
+    // own keys reuses the rank's range partitioning and sort, where
+    // ordering by `rank` would exchange the frame again ----
     "q60_ranked_flatten" -> ((s, dir) => {
       import s.implicits._
       SpotifyFlatten.rankedRecentlyPlayed(parsedRecentlyPlayed(s, dir))
         .withColumn("rank", $"rank".cast("long"))
-        .orderBy($"rank")
+        .orderBy($"played_at".desc, $"track_id")
     }),
 
     // ---- EP2 grouped-by-artist listening report (SURVEY §2.5's
@@ -2156,8 +2157,8 @@ object SparkEntry {
     // every 100 tokens into exactly-full sequences, emitting the
     // (sequence, document-fragment) boundary table a trainer needs
     // for attention masking + provenance. Global prefix sum computed
-    // WITHOUT a global window (range-partition subtotals + per-
-    // partition windows) ----
+    // WITHOUT a global window (GlobalRank: range partitions + per-
+    // partition carries) ----
     "q172_concat_cut_pack" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       operators.TextPrep.packConcatCut(
@@ -2490,8 +2491,8 @@ object SparkEntry {
     // most-target-like docs until the token budget fills (prefix-start
     // rule: kept iff tokens-before < budget, so the boundary doc may
     // overshoot by its own length). Global score-ordered prefix sum
-    // via range-partition subtotals + broadcast offsets — q172's
-    // technique on the selection axis; no global window anywhere ----
+    // by GlobalRank (range partitions + per-partition carries) —
+    // q172's operator on the selection axis; no global window ----
     "q176_dsir_token_budget" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       TextAnalysis.dsirResampleBudget(docs, "src0", tokenBudget = 4000L)
@@ -2499,9 +2500,9 @@ object SparkEntry {
 
     // ---- PER-SOURCE budget mixture: tomorrow's training mix as
     // (source -> token budget), each slice filled most-target-like
-    // first under the prefix-start rule — q176's prefix-sum machinery
-    // with `source` leading the range key and per-(partition, source)
-    // offsets stitching sources that span partitions ----
+    // first under the prefix-start rule — q176's GlobalRank with
+    // `source` as its group key, the carries stitching sources that
+    // span partitions ----
     "q177_dsir_mixture_budget" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       TextAnalysis.dsirMixtureBudget(docs, "src0",

@@ -237,5 +237,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // the per-group top-k physical operator plans without the
     // TopK.perGroup helper's self-registration fallback
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
   }
 }

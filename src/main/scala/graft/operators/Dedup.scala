@@ -188,7 +188,7 @@ object Dedup {
     * the encode re-read the corpus frame the trainer's first round had
     * silently released. A loop may only release what it checkpointed.
     */
-  private[operators] def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false); ()

@@ -150,14 +150,14 @@ object Similarity {
     */
   def topPairs(embeddings: DataFrame, n: Int): DataFrame = {
     val e = normalized(embeddings)
+    val order = Seq(col("cosine").desc, col("vec_a"), col("vec_b"))
     val top = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         expr(dotExpr("a.u", "b.u")).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))
+      .orderBy(order: _*)
       .limit(n) // TakeOrderedAndProject: per-partition top-n heaps, no global sort
-    top.withColumn("rnk", row_number().over(
-        Window.orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))))
-      .select(col("rnk").cast("long").as("rnk"), col("vec_a"), col("vec_b"), col("cosine"))
+    graft.plans.GlobalRank(top, order)
+      .select(col("rnk"), col("vec_a"), col("vec_b"), col("cosine"))
       .orderBy(col("rnk"))
   }
 
@@ -1177,15 +1177,15 @@ object Similarity {
     */
   def topPairsLsh(embeddings: DataFrame, n: Int, planes: Int, dim: Int): DataFrame = {
     val b = bucketed(embeddings, planes, dim)
+    val order = Seq(col("cosine").desc, col("vec_a"), col("vec_b"))
     val top = b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         expr(dotExpr("a.u", "b.u")).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))
+      .orderBy(order: _*)
       .limit(n) // TakeOrderedAndProject: per-partition top-n heaps
-    top.withColumn("rnk", row_number().over(
-        Window.orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))))
-      .select(col("rnk").cast("long").as("rnk"), col("vec_a"), col("vec_b"), col("cosine"))
+    graft.plans.GlobalRank(top, order)
+      .select(col("rnk"), col("vec_a"), col("vec_b"), col("cosine"))
       .orderBy(col("rnk"))
   }
 
@@ -1361,12 +1361,12 @@ object Similarity {
       .limit(n) // TakeOrderedAndProject: per-partition bottom-n heaps
     // the label joins the n SURVIVORS, never the corpus: at 100 TB
     // this is a broadcast of n rows against one pass of the label
-    // table, not a corpus-wide carry or corpus×corpus join
+    // table, not a corpus-wide carry or corpus×corpus join. They are
+    // ranked first, while they are still the limit's one partition.
     val lab = embeddings.select(col("vec_id"), col("label").cast("long").as("label"))
-    scored.join(lab, Seq("vec_id"))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("cos_fp").asc, col("vec_id"))))
-      .select(col("rnk").cast("long").as("rnk"), col("vec_id"), col("label"), col("cos_fp"))
+    graft.plans.GlobalRank(scored, Seq(col("cos_fp").asc, col("vec_id")))
+      .join(lab, Seq("vec_id"))
+      .select(col("rnk"), col("vec_id"), col("label"), col("cos_fp"))
       .orderBy(col("rnk"))
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The three nested-JSON → flat-table projections of the reference,
@@ -71,16 +70,14 @@ object SpotifyFlatten {
     * 1-based position in API response order, which is recency-descending,
     * so we anchor it on `played_at` desc (SURVEY.md W1: never trust
     * incoming row order) with track_id as deterministic tie-break.
-    * The window is UNPARTITIONED because the rank is global by spec,
-    * so every row goes through one task. The input is not bounded to
-    * one API page (≤ 50 rows): `graft.Jobs ep3` ranks a whole day feed
-    * of many pages. Replacing this with a distributed global rank is
-    * ROADMAP item 4.
+    * The rank is global by spec, and the input is not bounded to one
+    * API page (≤ 50 rows): `graft.Jobs ep3` ranks a whole day feed of
+    * many pages. [[graft.plans.GlobalRank]] range-partitions the feed
+    * on that order, so no task holds more than its range; a one-page
+    * feed coalesces to one partition and stamps with no extra job.
     */
   def rankedRecentlyPlayed(payload: DataFrame): DataFrame = {
-    val w = Window.orderBy(
-      col("played_at").desc, col("track_id"))
-    payload
+    val flat = payload
       .filter(col("items").isNotNull)
       .select(explode(col("items")).as("i"))
       .filter(col("i.track").isNotNull)
@@ -97,6 +94,8 @@ object SpotifyFlatten {
         coalesce(col("i.track.id"), lit("")).as("track_id"),
         coalesce(try_element_at(col("i.track.artists"), lit(1)).getField("id"), lit("")).as("artist_id"),
         coalesce(col("i.track.album.id"), lit("")).as("album_id"))
-      .withColumn("rank", row_number().over(w))
+    graft.plans.GlobalRank(flat, Seq(col("played_at").desc, col("track_id")))
+      .withColumnRenamed("rnk", "rank")
+      .withColumn("rank", col("rank").cast("int"))
   }
 }

@@ -721,7 +721,7 @@ object TextAnalysis {
     * symbols).
     *
     * `greedyPool = 0` (the default) SIZE-GATES the choice (VERDICT r17
-    * item 4, the dsirResampleBudget pattern): batches of
+    * item 4): batches of
     * [[GreedyBatchGate]] or more select via the cascade with pool
     * [[GreedyDefaultPool]] — at vocab-scale batches the grouped rule
     * leaves most of each wave's disjointness capacity unused (probe:
@@ -1388,7 +1388,13 @@ object TextAnalysis {
     * al. report as best-performing (see [[dsirTf]]).
     */
   def dsirWeights(docs: DataFrame, targetSource: String, buckets: Int = 64,
-                  ngram: Int = 1): DataFrame = {
+                  ngram: Int = 1): DataFrame =
+    unorderedWeights(docs, targetSource, buckets, ngram).orderBy(col("doc_id"))
+
+  /** [[dsirWeights]] without its output order, for consumers that
+    * impose their own. */
+  private def unorderedWeights(docs: DataFrame, targetSource: String, buckets: Int,
+                               ngram: Int): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2 (got $buckets)")
     require(ngram >= 1, s"ngram must be >= 1 (got $ngram)")
     // tf feeds BOTH the bucket-count build and the score join. Left
@@ -1424,10 +1430,10 @@ object TextAnalysis {
     */
   private def dsirScore(tf: DataFrame, bucketCounts: DataFrame,
                         targetSource: String, buckets: Int): DataFrame = {
-    val byAll = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-    val lr = bucketCounts
-      .withColumn("tt", sum(col("tc")).over(byAll))
-      .withColumn("st", sum(col("sc")).over(byAll))
+    // corpus totals as a one-row aggregate crossed onto the ≤ buckets
+    // rows, not a window over them
+    val totals = bucketCounts.agg(sum(col("tc")).as("tt"), sum(col("sc")).as("st"))
+    val lr = bucketCounts.crossJoin(totals)
       .select(col("b"),
         (log((col("tc") + 1L).cast("double") / (col("tt") + buckets)) -
          log((col("sc") + 1L).cast("double") / (col("st") + buckets))).as("lr"))
@@ -1447,7 +1453,6 @@ object TextAnalysis {
       .agg(sum(col("wl")).as("w_sum"), sum(col("tf")).as("n_tokens"))
       .select(col("doc_id"), col("n_tokens"),
         (col("w_sum").cast("double") / col("n_tokens")).as("avg_log_ratio"))
-      .orderBy(col("doc_id"))
   }
 
   /** Per-doc hashed-bucket term frequencies — the front half shared by
@@ -1764,6 +1769,7 @@ object TextAnalysis {
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(4)))
       .toDF("b", "tc", "sc")
     dsirScore(dsirTf(batch, buckets, ngram), state, targetSource, buckets)
+      .orderBy(col("doc_id"))
   }
 
   /** Importance RESAMPLING on [[dsirWeights]]: the top-`k` most
@@ -1771,19 +1777,15 @@ object TextAnalysis {
     * doc_id — the selection step that actually builds the steered
     * training mix. The top-k is a TakeOrderedAndProject heap (bounded
     * per-partition memory, no global sort of the corpus); ranks are
-    * minted AFTER the k-row cut, so the window never sees more than
-    * k rows.
+    * minted AFTER the k-row cut, over its one partition.
     * Output: (rnk, doc_id, n_tokens, avg_log_ratio) ordered by rnk.
     */
   def dsirResample(docs: DataFrame, targetSource: String, k: Int,
                    buckets: Int = 64, ngram: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    import org.apache.spark.sql.expressions.Window
-    dsirWeights(docs, targetSource, buckets, ngram)
-      .orderBy(col("avg_log_ratio").desc, col("doc_id"))
-      .limit(k)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("avg_log_ratio").desc, col("doc_id"))).cast("long"))
+    val order = Seq(col("avg_log_ratio").desc, col("doc_id"))
+    graft.plans.GlobalRank(dsirWeights(docs, targetSource, buckets, ngram)
+      .orderBy(order: _*).limit(k), order)
       .select(col("rnk"), col("doc_id"), col("n_tokens"), col("avg_log_ratio"))
       .orderBy(col("rnk"))
   }
@@ -1798,128 +1800,29 @@ object TextAnalysis {
     * under-fill whenever the boundary document is long).
     *
     * Scale shape — a global score-ordered prefix sum WITHOUT a global
-    * window ([[graft.operators.TextPrep.packConcatCut]]'s technique):
-    * the narrow (doc_id, n_tokens, score) frame range-partitions on
-    * (score desc, doc_id), per-partition token/row subtotals come back
-    * as one row per partition, their exclusive prefixes broadcast as
-    * partition offsets, and each row's global cumulative-before /
-    * rank are per-partition stamps plus the offset. No stage sees
-    * more than its partition; the budget filter prunes everything
-    * past the boundary before any downstream consumer.
+    * window: [[graft.plans.GlobalRank]] range-partitions the narrow
+    * (doc_id, n_tokens, score) frame on (score desc, doc_id) and
+    * stamps each row's rank and tokens-before from per-partition
+    * carries, so no stage sees more than its partition and one plan
+    * serves every corpus size (a small corpus coalesces to one
+    * partition and stamps with no extra job). The budget filter
+    * prunes everything past the boundary before any downstream
+    * consumer.
     * Output: (rnk, doc_id, n_tokens, cum_tokens, avg_log_ratio)
     * ordered by rnk; cum_tokens is the inclusive running total.
     */
-  /** Corpus-size threshold below which [[dsirResampleBudget]] takes
-    * the plain global-window plan instead of the stamped
-    * range-partition prefix sum. The stamped machinery pays a fixed
-    * ~6-13s constant (Dataset→RDD conversion, a localCheckpoint, a
-    * subtotal collect) that the one-task window simply doesn't:
-    * `tools/scaleprobe_r14_budget.jsonl` + the r15 ×500 extension
-    * measure the window form faster through ~2.5M selection rows with
-    * the gap still open — while above ~1e8 rows the unpartitioned
-    * window's single-task sort stops completing at all. The default
-    * keeps a wide safety margin under that wall; override via the
-    * `graft.budget.windowMaxRows` system property (0 forces the
-    * stamped plan — how the spec pins both plans equal).
-    */
-  private def budgetWindowMaxRows: Long =
-    sys.props.get("graft.budget.windowMaxRows").map(_.toLong)
-      .getOrElse(4000000L)
-
-  /** The small-corpus plan: one global window over the scored frame.
-    * Identical output to the stamped plan (QuantLmSkewSpec pins it);
-    * cheaper below [[budgetWindowMaxRows]] because the corpus fits one
-    * sort task and the stamped constant dominates. */
-  private def dsirBudgetWindowPlan(weights: DataFrame,
-                                   tokenBudget: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("avg_log_ratio").desc, col("doc_id"))
-    weights
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-      .filter(col("cum_tokens") - col("n_tokens") < tokenBudget)
-      .select(col("rnk"), col("doc_id"), col("n_tokens"), col("cum_tokens"),
-        col("avg_log_ratio"))
-      .orderBy(col("rnk"))
-  }
-
-  /** @param knownRows caller-supplied corpus row count for the
-    *   window-vs-stamped plan dispatch, skipping the size probe
-    *   entirely — pass it when the count is already known (a manifest,
-    *   a prior count, a bounded feed). */
   def dsirResampleBudget(docs: DataFrame, targetSource: String,
                          tokenBudget: Long, buckets: Int = 64,
-                         ngram: Int = 1,
-                         knownRows: Option[Long] = None): DataFrame = {
+                         ngram: Int = 1): DataFrame = {
     require(tokenBudget >= 1, s"tokenBudget must be >= 1 (got $tokenBudget)")
-    val spark = docs.sparkSession
-    // the dispatch size: the caller's hint wins; absent one, a
-    // metadata-countable input (a bare scan, possibly projected —
-    // parquet answers count() from footer stats) pays one cheap count
-    // job. A DERIVED input (filters/joins upstream) must NOT pay a
-    // full extra upstream pass just to pick a plan: there the scored
-    // selection — needed by BOTH plans anyway — is materialized once
-    // and the count read off the (3-column, one-row-per-doc)
-    // materialization, so the probe's only cost is the narrow persist
-    // the stamped path would pay at `frozen` regardless.
-    def metadataCountable(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-      p match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LeafNode => true
-        case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          metadataCountable(pr.child)
-        case _ => false
-      }
-    val windowMax = budgetWindowMaxRows
-    var sel = dsirWeights(docs, targetSource, buckets, ngram)
-      .select(col("doc_id"), col("n_tokens"), col("avg_log_ratio"))
-    val useWindow = windowMax > 0 && {
-      val rows = knownRows.getOrElse {
-        if (metadataCountable(docs.queryExecution.optimizedPlan)) docs.count()
-        else { sel = graft.operators.Dedup.materialize(sel); sel.count() }
-      }
-      rows <= windowMax
-    }
-    if (useWindow) return dsirBudgetWindowPlan(sel, tokenBudget)
-    val pre = sel
-      .repartitionByRange(col("avg_log_ratio").desc, col("doc_id"))
-      .sortWithinPartitions(col("avg_log_ratio").desc, col("doc_id"))
-    import org.apache.spark.sql.types._
-    val schema = StructType(pre.schema.fields ++ Seq(
-      StructField("pid", IntegerType, nullable = false),
-      StructField("ps", LongType, nullable = false),
-      StructField("pr", LongType, nullable = false)))
-    val stamped = pre.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = 0L
-      var row = 0L
-      it.map { r =>
-        val n = r.getLong(1)
-        val out = org.apache.spark.sql.Row(r.get(0), n, r.get(2), pid, acc, row)
-        acc += n; row += 1L
-        out
-      }
-    }
-    // frozen so the subtotal job and the final plan can never disagree
-    // on range placement (same discipline as packConcatCut)
-    val frozen = graft.operators.Dedup.materialize(
-      spark.createDataFrame(stamped, schema))
-    val subtotals = frozen.groupBy(col("pid"))
-      .agg(sum(col("n_tokens")).as("t"), count(lit(1)).as("c"))
-      .orderBy(col("pid")).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val tokPrefix = subtotals.scanLeft(0L) { case (a, (_, t, _)) => a + t }
-    val rowPrefix = subtotals.scanLeft(0L) { case (a, (_, _, c)) => a + c }
-    val tokOff = typedLit((subtotals.map(_._1) zip tokPrefix).toMap)
-    val rowOff = typedLit((subtotals.map(_._1) zip rowPrefix).toMap)
-    frozen
-      .withColumn("cum_before",
-        col("ps") + coalesce(element_at(tokOff, col("pid")), lit(0L)))
+    val order = Seq(col("avg_log_ratio").desc, col("doc_id"))
+    val sel = unorderedWeights(docs, targetSource, buckets, ngram)
+    graft.plans.GlobalRank(sel, order, sumOf = Some(col("n_tokens")))
       .filter(col("cum_before") < tokenBudget)
-      .withColumn("rnk",
-        col("pr") + coalesce(element_at(rowOff, col("pid")), lit(0L)) + lit(1L))
-      .withColumn("cum_tokens", col("cum_before") + col("n_tokens"))
-      .select(col("rnk"), col("doc_id"), col("n_tokens"), col("cum_tokens"),
-        col("avg_log_ratio"))
-      .orderBy(col("rnk"))
+      .select(col("rnk"), col("doc_id"), col("n_tokens"),
+        (col("cum_before") + col("n_tokens")).as("cum_tokens"), col("avg_log_ratio"))
+      // rnk follows this order, which the ranked frame already holds
+      .orderBy(order: _*)
   }
 
   /** PER-SOURCE budget mixture — the step that actually builds
@@ -1930,13 +1833,10 @@ object TextAnalysis {
     * steering distribution, never a selectable slice (budgets naming
     * it are rejected; [[dsirWeights]] scores only non-target docs).
     *
-    * Scale shape: the same range-partition prefix-sum as
-    * [[dsirResampleBudget]], with `source` leading the range key and
-    * the per-partition accumulators RESETTING at source boundaries —
-    * so a source spanning partitions stitches through per-(partition,
-    * source) offsets, and no stage sorts more than its partition.
-    * The subtotal collect is one row per (partition, live source) —
-    * bounded driver data.
+    * Scale shape: [[dsirResampleBudget]]'s [[graft.plans.GlobalRank]]
+    * with `source` as the group key leading the range key — rank and
+    * tokens-before restart per source, and a source spanning
+    * partitions stitches through the operator's per-partition carries.
     * Output: (source, rnk, doc_id, n_tokens, cum_tokens,
     * avg_log_ratio) ordered by (source, rnk); rnk restarts per source.
     */
@@ -1948,64 +1848,18 @@ object TextAnalysis {
       require(b >= 1, s"budget for '$s' must be >= 1 (got $b)") }
     require(!budgets.contains(targetSource),
       s"'$targetSource' is the steering target, not a selectable slice")
-    val spark = docs.sparkSession
-    val pre = dsirWeights(docs, targetSource, buckets, ngram)
+    val order = Seq(col("avg_log_ratio").desc, col("doc_id"))
+    val sel = unorderedWeights(docs, targetSource, buckets, ngram)
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       .filter(col("source").isin(budgets.keys.toSeq: _*))
       .select(col("source"), col("doc_id"), col("n_tokens"), col("avg_log_ratio"))
-      .repartitionByRange(col("source"), col("avg_log_ratio").desc, col("doc_id"))
-      .sortWithinPartitions(col("source"), col("avg_log_ratio").desc, col("doc_id"))
-    import org.apache.spark.sql.types._
-    val schema = StructType(pre.schema.fields ++ Seq(
-      StructField("pid", IntegerType, nullable = false),
-      StructField("ps", LongType, nullable = false),
-      StructField("pr", LongType, nullable = false)))
-    val stamped = pre.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: String = null
-      var acc = 0L
-      var row = 0L
-      it.map { r =>
-        val src = r.getString(0)
-        if (src != cur) { cur = src; acc = 0L; row = 0L }
-        val n = r.getLong(2)
-        val out = org.apache.spark.sql.Row(src, r.get(1), n, r.get(3), pid, acc, row)
-        acc += n; row += 1L
-        out
-      }
-    }
-    val frozen = graft.operators.Dedup.materialize(
-      spark.createDataFrame(stamped, schema))
-    // one row per (partition, source present in it) — bounded
-    val subtotals = frozen.groupBy(col("pid"), col("source"))
-      .agg(sum(col("n_tokens")).as("t"), count(lit(1)).as("c"))
-      .orderBy(col("source"), col("pid")).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    // exclusive prefixes per source across partitions (pid order)
-    val tokOffM = scala.collection.mutable.Map.empty[String, Long]
-    val rowOffM = scala.collection.mutable.Map.empty[String, Long]
-    var curSrc: String = null
-    var tAcc = 0L
-    var cAcc = 0L
-    subtotals.foreach { case (pid, src, t, c) =>
-      if (src != curSrc) { curSrc = src; tAcc = 0L; cAcc = 0L }
-      tokOffM(s"$pid|$src") = tAcc
-      rowOffM(s"$pid|$src") = cAcc
-      tAcc += t; cAcc += c
-    }
-    val tokOff = typedLit(tokOffM.toMap)
-    val rowOff = typedLit(rowOffM.toMap)
-    val budgetOf = typedLit(budgets)
-    frozen
-      .withColumn("k", concat(col("pid").cast("string"), lit("|"), col("source")))
-      .withColumn("cum_before",
-        col("ps") + coalesce(element_at(tokOff, col("k")), lit(0L)))
-      .filter(col("cum_before") < element_at(budgetOf, col("source")))
-      .withColumn("rnk",
-        col("pr") + coalesce(element_at(rowOff, col("k")), lit(0L)) + lit(1L))
-      .withColumn("cum_tokens", col("cum_before") + col("n_tokens"))
+    graft.plans.GlobalRank(sel, order, groupBy = Seq(col("source")),
+        sumOf = Some(col("n_tokens")))
+      .filter(col("cum_before") < element_at(typedLit(budgets), col("source")))
       .select(col("source"), col("rnk"), col("doc_id"), col("n_tokens"),
-        col("cum_tokens"), col("avg_log_ratio"))
-      .orderBy(col("source"), col("rnk"))
+        (col("cum_before") + col("n_tokens")).as("cum_tokens"), col("avg_log_ratio"))
+      // (source, rnk) follows this order, which the ranked frame holds
+      .orderBy(col("source") +: order: _*)
   }
 
   def fingerprint(docs: DataFrame): DataFrame = {

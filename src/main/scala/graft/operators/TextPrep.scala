@@ -174,18 +174,14 @@ object TextPrep {
     * documents can't mask cross-document attention or recover
     * provenance.
     *
-    * Scale shape — the global prefix sum WITHOUT a global window: the
-    * frame range-partitions on doc_id (sorted within partitions),
-    * per-partition token subtotals come back as one row per
-    * partition, their exclusive prefix becomes a broadcast
-    * partition-offset map, and each row's global start = partition
-    * offset + a window sum PARTITIONED by partition id. No stage
-    * ever sees more than its partition; the only driver data is one
-    * subtotal per partition. The frame is localCheckpointed after
-    * partition ids are stamped so the two passes (subtotals, final
-    * plan) can never disagree on placement. Fragment arithmetic is
-    * then pure per-row column math + a bounded explode (a doc emits
-    * one row per sequence it touches).
+    * Scale shape — the global prefix sum WITHOUT a global window:
+    * [[graft.plans.GlobalRank]] range-partitions the frame on doc_id
+    * and stamps each row's global start from per-partition carries
+    * (one job when there is more than one partition, none when AQE
+    * coalesced the input to one). No stage ever sees more than its
+    * partition; the only driver data is one summary per partition.
+    * Fragment arithmetic is then pure per-row column math + a bounded
+    * explode (a doc emits one row per sequence it touches).
     *
     * Output: (seq_idx, seq_off, doc_id, doc_off, frag_len, first_id,
     * last_id, ids_wsum) ordered by (seq_idx, seq_off); `ids_wsum` is
@@ -201,7 +197,7 @@ object TextPrep {
     * provenance table stay consistent with the actual token stream.
     * A document with an empty ids array still contributes its
     * separator (one token). Same machinery, same scale shape: the
-    * append is a per-row column op before the stamped prefix sum.
+    * append is a per-row column op before the prefix sum.
     */
   def packConcatCutSep(encoded: DataFrame, budget: Int, sepId: Int): DataFrame =
     packConcatCut(withSeparator(encoded, sepId), budget)
@@ -314,13 +310,13 @@ object TextPrep {
     * `sepId` opts into separator-terminated packing
     * ([[packConcatCutSep]]'s stream shape). Both tables observe the
     * same cut by construction: they project the same fragment frame,
-    * whose prefix sum is frozen (localCheckpoint) inside
-    * [[concatCutFragments]].
+    * whose offsets [[concatCutFragments]] materializes once for both
+    * writes.
     */
   def writeTrainingShards(encoded: DataFrame, budget: Int, basePath: String,
                           sepId: Option[Int] = None): Unit = {
     val enc = sepId.map(withSeparator(encoded, _)).getOrElse(encoded)
-    val frags = concatCutFragments(enc, budget)
+    val frags = concatCutFragments(enc, budget, pinned = true)
     boundaryTable(frags).write.mode("overwrite")
       .parquet(s"$basePath/boundaries")
     // shardTable is already range-partitioned on seq_idx (its single
@@ -336,43 +332,23 @@ object TextPrep {
                          basePath: String): DataFrame =
     spark.read.parquet(s"$basePath/shards").orderBy(col("seq_idx"))
 
-  private def concatCutFragments(encoded: DataFrame, budget: Int): DataFrame = {
+  /** Every document's fragments under the `budget` cut, from its
+    * global token offset `gs`: the exclusive running sum of token
+    * counts in doc_id order, stamped by [[graft.plans.GlobalRank]].
+    * doc_id alone is a total order here: it is the encoded corpus's
+    * key (`bpeEncodeIds*` assemble one ids row per doc_id, the
+    * persisted corpus merges on it, and documents.doc_id is the
+    * primary key its producers read). `pinned` materializes the
+    * offsets once, for a caller that reads the cut twice. */
+  private def concatCutFragments(encoded: DataFrame, budget: Int,
+                                 pinned: Boolean = false): DataFrame = {
     require(budget >= 1, s"budget must be >= 1 (got $budget)")
-    val spark = encoded.sparkSession
     val pre = encoded.select(col("doc_id"), col("ids"),
         org.apache.spark.sql.functions.size(col("ids")).cast("long").as("n"))
       .filter(col("n") >= 1)
-      .repartitionByRange(col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-    // the within-partition EXCLUSIVE prefix sum is stamped in the same
-    // pass as the partition id — imperative per-partition logic, the
-    // one shape a window can't do without a pid re-exchange (post-
-    // checkpoint the optimizer forgets the partitioning and would
-    // shuffle the whole frame again just to group by pid)
-    val schema = org.apache.spark.sql.types.StructType(pre.schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("pid",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("ps",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val stamped = pre.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = 0L
-      it.map { r =>
-        val n = r.getLong(2)
-        val out = org.apache.spark.sql.Row(r.get(0), r.get(1), n, pid, acc)
-        acc += n
-        out
-      }
-    }
-    // frozen so the two consumers (subtotal job, final plan) can never
-    // disagree on range placement
-    val frozen = Dedup.materialize(spark.createDataFrame(stamped, schema))
-    // one row per partition — bounded driver data by construction
-    val subtotals = frozen.groupBy(col("pid")).agg(sum(col("n")).as("t"))
-      .orderBy(col("pid")).collect().map(r => (r.getInt(0), r.getLong(1)))
-    val prefixes = subtotals.scanLeft(0L) { case (acc, (_, t)) => acc + t }
-    val offsetOf = typedLit((subtotals.map(_._1) zip prefixes).toMap)
-    frozen
-      .withColumn("gs", col("ps") + coalesce(element_at(offsetOf, col("pid")), lit(0L)))
+    val offsets = graft.plans.GlobalRank(pre, Seq(col("doc_id")), sumOf = Some(col("n")))
+      .withColumnRenamed("cum_before", "gs")
+    (if (pinned) Dedup.materialize(offsets) else offsets)
       .withColumn("seq_idx", explode(sequence(
         expr(s"gs div $budget"), expr(s"(gs + n - 1) div $budget"))))
       .withColumn("fs", greatest(col("gs"), col("seq_idx") * budget))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
@@ -99,26 +99,40 @@ object TopK {
     // non-empty partitions) — fail at construction, naming the knob
     require(k >= 1, s"per-group top-k needs k >= 1 (got $k)")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    inject(spark, TopKStrategy)
     val child = df.queryExecution.analyzed
-    // bind name references to the child's output here: the analyzer
-    // does not descend into unknown node types' expressions. Name
-    // matching goes through the session resolver so case sensitivity
-    // follows spark.sql.caseSensitive like every built-in lookup.
+    val bind = binder(spark, child)
+    GraftSqlBridge.ofRows(spark,
+      TopKPerGroupNode(keyCols.map(bind), sortOrders(orderCols, bind), k, child))
+  }
+
+  /** Add `strategy` to the session's planner once (idempotent) — the
+    * self-registration fallback for sessions built without
+    * [[graft.functions.GraftExtensions]]. */
+  private[plans] def inject(spark: SparkSession, strategy: SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ strategy
+
+  /** Column → expression bound to `child`'s output. Binding happens
+    * here because the analyzer does not descend into unknown node
+    * types' expressions. Name matching goes through the session
+    * resolver so case sensitivity follows spark.sql.caseSensitive like
+    * every built-in lookup. */
+  private[plans] def binder(spark: SparkSession, child: LogicalPlan): Column => Expression = {
     val resolver = spark.sessionState.conf.resolver
-    def bind(e: Expression): Expression = e.transformUp {
+    c => GraftSqlBridge.expression(c).transformUp {
       case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
         child.output.find(a => resolver(a.name, u.nameParts.mkString(".")))
           .getOrElse(throw new IllegalArgumentException(
             s"column ${u.name} not in ${child.output.map(_.name).mkString(", ")}"))
     }
-    val order = orderCols.map(GraftSqlBridge.expression).map(bind).map {
+  }
+
+  /** Order columns as sort orders; a bare column sorts ascending. */
+  private[plans] def sortOrders(cols: Seq[Column], bind: Column => Expression): Seq[SortOrder] =
+    cols.map(bind).map {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)
     }
-    GraftSqlBridge.ofRows(spark,
-      TopKPerGroupNode(keyCols.map(GraftSqlBridge.expression).map(bind), order, k, child))
-  }
 }

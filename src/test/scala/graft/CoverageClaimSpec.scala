@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the claim paragraph (round number, green/total counts, artifact
   * name) must match the newest CITABLE `CORRECTNESS_r*.json` driver
   * artifact in the repo root — citable meaning committed no later
-  * than the claim file's own last commit, because a round's driver
+  * than the claim file's own last commit (a file with uncommitted
+  * changes counts as committed now), because a round's driver
   * artifacts land AFTER the builder's final commit and can only be
   * cited by the next round's header regeneration (VERDICT r19 item
   * 3). The claim is machine-written by `tools/coverage_report.py`;
@@ -29,17 +30,26 @@ class CoverageClaimSpec extends AnyFunSuite {
     d
   }
 
-  /** Last-commit epoch (committer time) of a repo-relative path; None
-    * when the file is untracked or git is unavailable. */
+  private def git(args: String*): Option[String] =
+    try Some(new String(
+      new ProcessBuilder(("git" +: "-C" +: root.getPath +: args): _*)
+        .redirectErrorStream(false).start().getInputStream.readAllBytes(),
+      "UTF-8").trim)
+    catch { case _: Throwable => None }
+
+  // one instant per run, so paths "committed now" compare equal
+  private lazy val now = System.currentTimeMillis() / 1000
+
+  /** Last-commit epoch (committer time) of a repo-relative path; a
+    * path with uncommitted changes (untracked included) counts as
+    * committed now, so a run before its commit decides as a run after
+    * it does. None when git is unavailable. */
   private def commitEpoch(rel: String): Option[Long] =
-    try {
-      val out = new String(
-        new ProcessBuilder("git", "-C", root.getPath, "log", "-1",
-          "--format=%ct", "--", rel)
-          .redirectErrorStream(false).start().getInputStream.readAllBytes(),
-        "UTF-8").trim
-      if (out.isEmpty) None else Some(out.toLong)
-    } catch { case _: Throwable => None }
+    git("status", "--porcelain", "--", rel) match {
+      case Some(dirty) if dirty.nonEmpty => Some(now)
+      case Some(_) => git("log", "-1", "--format=%ct", "--", rel).filter(_.nonEmpty).map(_.toLong)
+      case None => None
+    }
 
   /** The newest artifact the claim file could have CITED: a round's
     * driver artifacts land in a commit AFTER the builder's last header

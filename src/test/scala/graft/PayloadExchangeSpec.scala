@@ -39,14 +39,28 @@ class PayloadExchangeSpec extends AnyFunSuite {
   private def broadcasts(plan: String): Seq[String] =
     plan.linesIterator.filter(_.contains("BroadcastExchange")).map(_.trim).toSeq
 
-  test("packShards plans ONE payload shuffle after the frozen fragments (range, reused by agg and sort)") {
-    // concatCutFragments materializes (localCheckpoint) before the
-    // fragment explode, so the plan from the checkpoint on is exactly
-    // the assembly: one range exchange, agg in place, local sort
-    val plan = finalPlan(TextPrep.packShards(
+  // the shuffles ABOVE the fragment cut: every exchange in the final
+  // plan minus those under the GlobalRank that stamps the cut's offsets
+  // (its doc_id range exchange and the encoder's own)
+  private def shufflesAboveCut(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.write.format("noop").mode("overwrite").save()
+    val plan = df.queryExecution.executedPlan
+    val cuts = aqe.collect(plan) { case g: graft.plans.GlobalRankExec => g }
+    assert(cuts.length == 1, s"one fragment cut expected:\n$plan")
+    val below = aqe.collect(cuts.head) { case e: ShuffleExchangeExec => e }
+    aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      .filterNot(e => below.exists(_ eq e))
+      .map(_.outputPartitioning.toString)
+  }
+
+  test("packShards plans ONE payload shuffle above the fragment cut (range, reused by agg and sort)") {
+    // above the cut the plan is exactly the assembly: one range
+    // exchange, agg in place, local sort
+    val ex = shufflesAboveCut(TextPrep.packShards(
       TextAnalysis.bpeEncodeIds(docs, merges = 2).filter(col("doc_id") < 200),
       budget = 64))
-    val ex = shuffles(plan)
     assert(ex.length == 1,
       s"shard assembly must ship the token payload through exactly one shuffle, got:\n${ex.mkString("\n")}")
     assert(ex.head.contains("rangepartitioning"),
@@ -54,10 +68,9 @@ class PayloadExchangeSpec extends AnyFunSuite {
   }
 
   test("packShardsWithSpans plans the same single range shuffle") {
-    val plan = finalPlan(TextPrep.packShardsWithSpans(
+    val ex = shufflesAboveCut(TextPrep.packShardsWithSpans(
       TextAnalysis.bpeEncodeIds(docs, merges = 2).filter(col("doc_id") < 200),
       budget = 64))
-    val ex = shuffles(plan)
     assert(ex.length == 1 && ex.head.contains("rangepartitioning"),
       s"got:\n${ex.mkString("\n")}")
   }

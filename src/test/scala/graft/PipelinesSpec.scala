@@ -89,6 +89,41 @@ class PipelinesSpec extends AnyFunSuite {
     assert(back.count() === 150L && back.select("played_at").distinct().count() === 150L)
   }
 
+  /** The CSV part files of `dir` concatenated in file-name order
+    * (partition order), so two runs' outputs compare byte for byte. */
+  private def csvText(dir: String): String =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).map(f => new String(Files.readAllBytes(f.toPath), "UTF-8"))
+      .mkString
+
+  test("EP1 and EP3 are retry-safe: a re-run into the same path rewrites the same CSV") {
+    val ep1 = s"$tmp/ep1"
+    val tracks = (0 until 30).map(i => s"""{"id":"t$i","name":"S$i","popularity":$i,"artists":[{"name":"X"}]}""")
+    val ep1Feed = Seq(s"""{"tracks":[${tracks.mkString(",")}]}""").toDS()
+    val ep1First = Pipelines.topTracksEtl(spark, ep1Feed, ep1)
+    val ep1Csv = csvText(ep1)
+    assert(Pipelines.topTracksEtl(spark, ep1Feed, ep1) === ep1First)
+    assert(csvText(ep1) === ep1Csv)
+    val ep1Rows = spark.read.option("header", "true").csv(ep1)
+    assert(ep1Rows.count() === 30L && ep1Rows.select("track_id").distinct().count() === 30L)
+    // EP3 over a three-page feed, ranked across the range exchange's
+    // partitions (coalescing off), so the rank stitches partitions
+    SparkTestSession.withoutCoalescing {
+      val ep3 = s"$tmp/ep3"
+      val feed = plays("2024-01-10T22:00:00Z", 150).toDS()
+      val first = Pipelines.recentlyPlayedAnalysis(spark, feed, ep3)
+      val firstCsv = csvText(ep3)
+      assert(new java.io.File(ep3).listFiles().count(_.getName.startsWith("part-")) > 1)
+      assert(Pipelines.recentlyPlayedAnalysis(spark, feed, ep3) === first)
+      assert(csvText(ep3) === firstCsv)
+      val ranked = spark.read.option("header", "true").csv(ep3)
+        .select($"rank".cast("int"), $"played_at").as[(Int, String)].collect().sortBy(_._1)
+      assert(ranked.map(_._1).toSeq === (1 to 150))
+      assert(ranked.map(_._2).toSeq === ranked.map(_._2).toSeq.sorted.reverse,
+        "rank 1 is the most recent play")
+    }
+  }
+
   test("EP2 on a fresh sink runs two job-launching SQL executions; the XCom line is unchanged") {
     val feed = plays("2024-01-10T22:00:00Z", 150).toDS()
     val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

@@ -218,6 +218,45 @@ class PropertyFuzzSpec extends AnyFunSuite {
     }, n = 6)
   }
 
+  // GlobalRank against the Window reference: ties on `o` broken by the
+  // unique `id`, null summands, groups spanning partitions, empty
+  // partitions (few distinct keys over 4 range partitions) and empty
+  // input, with and without a leading group key
+  private def globalRankMatchesWindow(): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    val corpus = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 9 -> Gen.chooseNum(1, 60))
+      nGroups <- Gen.chooseNum(1, 4)
+      nKeys <- Gen.chooseNum(1, 12)
+      rows <- Gen.listOfN(n, for {
+        g <- Gen.chooseNum(0, nGroups - 1)
+        o <- Gen.chooseNum(0, nKeys - 1)
+        v <- Gen.frequency(9 -> Gen.chooseNum(0L, 1000L).map(Option(_)), 1 -> Gen.const(None))
+      } yield (s"g$g", o.toLong, v))
+    } yield rows.zipWithIndex.map { case ((g, o, v), id) => (g, o, id.toLong, v) }
+    check(Prop.forAll(corpus) { rows =>
+      val df = rows.toDF("g", "o", "id", "v").repartition(3)
+      def ranked(groups: Seq[org.apache.spark.sql.Column]) =
+        graft.plans.GlobalRank(df, Seq($"o".desc, $"id"), groups, Some($"v"))
+          .select($"id", $"rnk", $"cum_before").as[(Long, Long, Long)].collect().toSet
+      def reference(w: org.apache.spark.sql.expressions.WindowSpec) =
+        df.select($"id", row_number().over(w).cast("long"),
+            coalesce(sum($"v").over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+          .as[(Long, Long, Long)].collect().toSet
+      val byOrder = Window.orderBy($"o".desc, $"id")
+      ranked(Nil) == reference(byOrder) &&
+        ranked(Seq($"g")) == reference(byOrder.partitionBy($"g"))
+    }, n = 8)
+  }
+
+  test("GlobalRank equals the window reference on random corpora (coalesced)") {
+    globalRankMatchesWindow()
+  }
+
+  test("GlobalRank equals the window reference on random corpora (stitched partitions)") {
+    SparkTestSession.withoutCoalescing(globalRankMatchesWindow())
+  }
+
   test("packShards: concatenation equals the id stream, all but the last full, on random corpora") {
     val corpora = for {
       n <- Gen.chooseNum(1, 16)

@@ -200,13 +200,10 @@ class QuantLmSkewSpec extends AnyFunSuite {
   test("dsirResampleBudget: prefix-start rule, window-reference equality, partition invariance") {
     import org.apache.spark.sql.expressions.Window
     val budget = 4000L
-    // force the STAMPED plan: the size dispatch routes corpora this
-    // small to the window plan, which the reference below IS — the
-    // equality assertion must compare the two distinct plans
-    sys.props("graft.budget.windowMaxRows") = "0"
-    val out =
-      try TextAnalysis.dsirResampleBudget(docs, "src0", budget).collect()
-      finally sys.props.remove("graft.budget.windowMaxRows")
+    // coalescing off keeps the range exchange's 4 partitions, so the
+    // selection stitches across partitions instead of stamping one
+    val out = SparkTestSession.withoutCoalescing(
+      TextAnalysis.dsirResampleBudget(docs, "src0", budget).collect())
     // reference: one global window over the full weights frame
     val ref = TextAnalysis.dsirWeights(docs, "src0")
       .withColumn("rnk", row_number().over(
@@ -227,48 +224,23 @@ class QuantLmSkewSpec extends AnyFunSuite {
       TextAnalysis.dsirWeights(docs, "src0").count(),
       "selection stops exactly at the budget boundary (or exhausts the corpus)")
     // invariance to input partitioning
-    val out13 = TextAnalysis.dsirResampleBudget(docs.repartition(13), "src0", budget)
-      .collect()
+    val out13 = SparkTestSession.withoutCoalescing(
+      TextAnalysis.dsirResampleBudget(docs.repartition(13), "src0", budget).collect())
     assert(out13.map(_.toSeq).toSeq === out.map(_.toSeq).toSeq)
     // a budget smaller than the best doc still keeps exactly that doc
     val tiny = TextAnalysis.dsirResampleBudget(docs, "src0", 1L).collect()
     assert(tiny.length === 1 && tiny.head.getLong(0) === 1L)
-    // the DEFAULT dispatch (this corpus sits under the window
-    // threshold, so it takes the window plan) returns the same rows as
-    // the forced stamped plan above — the dispatch is plan-invisible
-    val dispatched = TextAnalysis.dsirResampleBudget(docs, "src0", budget).collect()
-    assert(dispatched.map(_.toSeq).toSeq === out.map(_.toSeq).toSeq,
-      "size-gated dispatch must be output-invisible")
-    // a DERIVED input (filter upstream — not metadata-countable) takes
-    // the materialize-and-count probe instead of re-running the
-    // upstream plan; a caller-supplied knownRows skips the probe
-    // entirely. All dispatch routes must stay output-identical.
-    val sub = docs.filter($"doc_id" % 2 === 0)
-    sys.props("graft.budget.windowMaxRows") = "0"
-    val subRef =
-      try TextAnalysis.dsirResampleBudget(sub, "src0", budget).collect()
-      finally sys.props.remove("graft.budget.windowMaxRows")
-    val subDisp = TextAnalysis.dsirResampleBudget(sub, "src0", budget).collect()
-    assert(subDisp.map(_.toSeq).toSeq === subRef.map(_.toSeq).toSeq,
-      "derived-input dispatch (materialized-selection probe) must be output-invisible")
-    val subHint = TextAnalysis.dsirResampleBudget(sub, "src0", budget,
-      knownRows = Some(sub.count())).collect()
-    assert(subHint.map(_.toSeq).toSeq === subRef.map(_.toSeq).toSeq,
-      "knownRows hint (window route) must be output-invisible")
-    val subBig = TextAnalysis.dsirResampleBudget(sub, "src0", budget,
-      knownRows = Some(budgetProbeForcedStampedRows)).collect()
-    assert(subBig.map(_.toSeq).toSeq === subRef.map(_.toSeq).toSeq,
-      "knownRows hint above the threshold (stamped route) must be output-invisible")
+    // the default (coalesced, one-partition) plan returns the same rows
+    val coalesced = TextAnalysis.dsirResampleBudget(docs, "src0", budget).collect()
+    assert(coalesced.map(_.toSeq).toSeq === out.map(_.toSeq).toSeq,
+      "partition count must be output-invisible")
   }
-
-  // a hint far above the window threshold — forces the stamped plan
-  // with zero count jobs
-  private val budgetProbeForcedStampedRows = 5000000L
 
   test("dsirMixtureBudget: per-source window equality, partition invariance, target guard") {
     import org.apache.spark.sql.expressions.Window
     val budgets = Map("src1" -> 400L, "src3" -> 250L)
-    val out = TextAnalysis.dsirMixtureBudget(docs, "src0", budgets).collect()
+    val out = SparkTestSession.withoutCoalescing(
+      TextAnalysis.dsirMixtureBudget(docs, "src0", budgets).collect())
     val w = Window.partitionBy($"source").orderBy($"avg_log_ratio".desc, $"doc_id")
     val ref = TextAnalysis.dsirWeights(docs, "src0")
       .join(docs.select($"doc_id", $"source"), Seq("doc_id"))
@@ -289,8 +261,8 @@ class QuantLmSkewSpec extends AnyFunSuite {
       assert(rows.sortBy(_.getLong(1)).init.forall(_.getLong(4) < b))
     }
     // invariance to input partitioning
-    val out7 = TextAnalysis.dsirMixtureBudget(docs.repartition(7), "src0", budgets)
-      .collect()
+    val out7 = SparkTestSession.withoutCoalescing(
+      TextAnalysis.dsirMixtureBudget(docs.repartition(7), "src0", budgets).collect())
     assert(out7.map(_.toSeq).toSeq === out.map(_.toSeq).toSeq)
     // the steering target is not a selectable slice
     val e = intercept[IllegalArgumentException] {

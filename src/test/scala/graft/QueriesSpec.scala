@@ -15,6 +15,16 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Run `body` with AQE partition coalescing off, so every exchange
+    * keeps all `spark.sql.shuffle.partitions` partitions (4 here) —
+    * how specs drive multi-partition paths on tiny inputs. */
+  def withoutCoalescing[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** Every catalog query runs non-empty on sf0.001 and its schema is
