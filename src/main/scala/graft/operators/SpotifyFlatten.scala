@@ -75,6 +75,9 @@ object SpotifyFlatten {
     * many pages. [[graft.plans.GlobalRank]] range-partitions the feed
     * on that order, so no task holds more than its range; a one-page
     * feed coalesces to one partition and stamps with no extra job.
+    * The flattened rows are rebalanced first so the range exchange
+    * samples its bounds from shuffle files: sampling the flatten itself
+    * would read and parse the payloads a second time.
     */
   def rankedRecentlyPlayed(payload: DataFrame): DataFrame = {
     val flat = payload
@@ -94,8 +97,9 @@ object SpotifyFlatten {
         coalesce(col("i.track.id"), lit("")).as("track_id"),
         coalesce(try_element_at(col("i.track.artists"), lit(1)).getField("id"), lit("")).as("artist_id"),
         coalesce(col("i.track.album.id"), lit("")).as("album_id"))
-    graft.plans.GlobalRank(flat, Seq(col("played_at").desc, col("track_id")))
+    graft.plans.GlobalRank(flat.hint("rebalance"), Seq(col("played_at").desc, col("track_id")))
       .withColumnRenamed("rnk", "rank")
+      // ansi-ok: a row number of one day's feed, far below Int.MaxValue
       .withColumn("rank", col("rank").cast("int"))
   }
 }

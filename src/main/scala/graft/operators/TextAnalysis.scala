@@ -1431,7 +1431,7 @@ object TextAnalysis {
   private def dsirScore(tf: DataFrame, bucketCounts: DataFrame,
                         targetSource: String, buckets: Int): DataFrame = {
     // corpus totals as a one-row aggregate crossed onto the ≤ buckets
-    // rows, not a window over them
+    // rows: a window keyed on a literal plans as an unpartitioned one
     val totals = bucketCounts.agg(sum(col("tc")).as("tt"), sum(col("sc")).as("st"))
     val lr = bucketCounts.crossJoin(totals)
       .select(col("b"),
